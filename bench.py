@@ -115,7 +115,8 @@ def _worker_env(scratch: str) -> dict:
     env = dict(os.environ)
     env["PYSPARK_SUBMIT_ARGS"] = _SUBMIT_ARGS
     env["PYTHONPATH"] = REPO + os.pathsep + env.get("PYTHONPATH", "")
-    env["LECTURA_SCRATCH"] = scratch
+    # shuffle/spill on the fast scratch volume (tmpfs when available)
+    env["SPARK_LOCAL_DIRS"] = os.path.join(scratch, "sparklocal")
     return env
 
 
@@ -136,31 +137,44 @@ def _cpu_steal_snapshot() -> tuple[int, int]:
 
 def run_crawl(master: str, corpus_dir: str, wh_dir: str, scratch: str,
               rounds: int = ROUNDS, keep_wh: bool = False) -> dict:
+    """One measured crawl in a fresh JVM through the spark-submit entry
+    (`python -m lectura.crawl`), with the shipped session config."""
+    shutil.rmtree(wh_dir, ignore_errors=True)
     s0, t0 = _cpu_steal_snapshot()
     cmd = [
-        sys.executable, "-m", "lectura.bench_worker",
+        sys.executable, "-m", "lectura.crawl",
         "--master", master, "--corpus", corpus_dir, "--warehouse", wh_dir,
         "--rounds", str(rounds),
         "--max-round-urls", str(MAX_ROUND_URLS),
-        "--use-bloom", "--html-gzip",
+        "--max-per-host", "50000", "--default-delay", "0.001",
         "--round-seconds", str(ROUND_SECONDS),
+        "--seen-capacity", "20000000",
+        "--use-bloom",
     ]
     p = subprocess.run(cmd, capture_output=True, text=True,
                        env=_worker_env(scratch), cwd=REPO)
-    for line in p.stdout.splitlines():
-        if line.startswith("BENCH_RESULT "):
-            # drop this run's warehouse + shuffle dirs before the next
-            # measurement starts (keeps tmpfs pressure flat across runs)
-            if not keep_wh:
-                shutil.rmtree(wh_dir, ignore_errors=True)
-            out = json.loads(line[len("BENCH_RESULT "):])
-            s1, t1 = _cpu_steal_snapshot()
-            out["steal_pct"] = (
-                round(100.0 * (s1 - s0) / (t1 - t0), 2) if t1 > t0 else None
-            )
-            return out
-    sys.stderr.write(p.stdout[-4000:] + "\n" + p.stderr[-4000:] + "\n")
-    raise RuntimeError(f"bench worker failed for {master}")
+    lines = [json.loads(x) for x in p.stdout.splitlines()
+             if x.startswith("{")]
+    if p.returncode != 0 or not lines or "crawl_s" not in lines[-1]:
+        sys.stderr.write(p.stdout[-4000:] + "\n" + p.stderr[-4000:] + "\n")
+        raise RuntimeError(f"crawl failed for {master}")
+    # drop this run's warehouse before the next measurement starts
+    # (keeps tmpfs pressure flat across runs)
+    if not keep_wh:
+        shutil.rmtree(wh_dir, ignore_errors=True)
+    *rounds_stats, summary = lines
+    s1, t1 = _cpu_steal_snapshot()
+    return {
+        "master": master,
+        "crawl_sec": summary["crawl_s"],
+        "rounds": {f"round{s['round']}": s["seconds"] for s in rounds_stats},
+        "scheduled": summary["scheduled"],
+        "extracted": summary["extracted"],
+        "urls_per_sec": round((summary["scheduled"] + summary["extracted"])
+                              / summary["crawl_s"], 1),
+        "steal_pct": (round(100.0 * (s1 - s0) / (t1 - t0), 2)
+                      if t1 > t0 else None),
+    }
 
 
 def run_export(master: str, wh_dir: str, scratch: str) -> dict:
@@ -193,13 +207,10 @@ def main() -> None:
 
     # --- corpus generation (parallel, deterministic; not timed as crawl) ---
     os.environ.setdefault("PYSPARK_SUBMIT_ARGS", _SUBMIT_ARGS)
-    from pyspark.sql import functions as F
-
     from lectura.config import CrawlConfig
     from lectura.session import get_spark
     from lectura.synth import SynthParams
-    from lectura.synth_spark import materialize_corpus_warc
-    from lectura.urlnorm import host_bucket
+    from lectura.synth_spark import write_corpus
 
     gen_local = os.path.join(scratch, "sparklocal-gen")
     os.makedirs(gen_local, exist_ok=True)
@@ -208,19 +219,8 @@ def main() -> None:
     t0 = time.time()
     p = SynthParams(n_urls=N_URLS, n_hosts=N_HOSTS, n_seeds=N_SEEDS,
                     body_kb=BODY_KB, with_text=False)
-    # WARC-native layout: packfiles + slim index (no html column at all)
-    pages, seeds, robots = materialize_corpus_warc(
-        spark, p, f"{corpus_dir}/warc"
-    )
-    # pre-bucket so the crawl adopts the corpus zero-copy (no init rewrite)
-    pages = pages.withColumn(
-        "host_bucket",
-        host_bucket(F.lower(F.expr("parse_url(url, 'HOST')")),
-                    CrawlConfig().host_buckets),
-    )
-    pages.write.mode("overwrite").parquet(f"{corpus_dir}/pages")
-    seeds.write.mode("overwrite").parquet(f"{corpus_dir}/seeds")
-    robots.write.mode("overwrite").parquet(f"{corpus_dir}/robots")
+    # WARC-native layout, pre-bucketed so the crawl adopts it zero-copy
+    write_corpus(spark, p, corpus_dir, CrawlConfig().host_buckets)
     gen_sec = round(time.time() - t0, 1)
 
     # --- operator queries at the sf dir (timed individually) ---------------
@@ -259,9 +259,8 @@ def main() -> None:
     # the gate pair brackets the single local[N] run with two local[4N]
     # runs and uses their MEAN, so a mid-sequence host slowdown moves
     # numerator and denominator together instead of breaking the ratio;
-    # r3 adds per-leg /proc/stat steal sampling and a pre-registered
-    # stationarity rule (see gate_triplet below) so an interference-hit
-    # bracket is re-measured once and the evidence is in the artifact.
+    # per-leg /proc/stat steal sampling and the re-measure triggers below
+    # put the interference evidence in the artifact.
     # The saturated pair runs the SAME 3-round job as the headline and
     # its big side is the mean of the two headline walls (no
     # pick-the-best on either side of an efficiency ratio).
@@ -277,15 +276,6 @@ def main() -> None:
     export = run_export(f"local[{CPUS}]",
                         os.path.join(scratch, "wh_bigb"), scratch)
     shutil.rmtree(os.path.join(scratch, "wh_bigb"), ignore_errors=True)
-    # Stationarity rule (pre-registered, symmetric): the two big runs of
-    # a bracket estimate the SAME quantity, so if they disagree by more
-    # than 25 % the measurement window was not stationary (hypervisor
-    # steal hit part of the triplet — the per-leg steal_pct shows which)
-    # and the whole triplet is re-measured ONCE. The triplet with the
-    # smaller internal big-run spread is used; BOTH attempts are
-    # disclosed machine-readably (gate_attempts). This re-runs the full
-    # bracket on an objective internal-consistency criterion — it never
-    # picks the faster of two valid results.
     def gate_triplet(tag: str) -> dict:
         b1 = run_crawl(f"local[{SCALE_4N}]", corpus_dir,
                        os.path.join(scratch, f"wh_sc4na{tag}"), scratch,

@@ -2,7 +2,7 @@
 
     python scripts/build_zip.py
     spark-submit --master ... --py-files lectura.zip crawl_submit.py \
-        --warehouse /path/wh --rounds 3 --use-bloom
+        --corpus /path/corpus --warehouse /path/wh --rounds 3 --use-bloom
 """
 
 from lectura.crawl import main

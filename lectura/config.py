@@ -38,8 +38,9 @@ class CrawlConfig:
     # picks the strategy — an unconditional hint OOMs the driver when a
     # cluster-scale round schedules 10^7-10^8 URLs.
     broadcast_max_rows: int = 4_000_000
-    # pages.html stored WARC-style gzipped (bench/cluster corpora); bodies
-    # are inflated inside the extraction workers (lectura/extract.py)
+    # inline pages.html stored gzipped (one member per page); bodies are
+    # inflated inside the extraction workers (lectura/extract.py).
+    # WARC-pointer corpora are always gzip members and ignore this.
     html_gzip: bool = False
     # Sitemap discovery as a frontier source (S11 wired into the crawl —
     # SEMANTICS.md §15): robots `Sitemap:` directives are resolved at

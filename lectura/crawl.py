@@ -8,13 +8,15 @@ frontier(r+1)/text/metrics/seen writes → atomic round commit. The loop is
 driver-side Python (a crawl is iterative — each round feeds the next, which
 one streaming query cannot express; SURVEY.md §2.8).
 
-Run on a cluster:  spark-submit --py-files lectura.zip -m lectura.crawl \
-    --warehouse <dir> --rounds R [--use-bloom]
+Run on a cluster (corpus layout: synth_spark.write_corpus):
+    spark-submit --py-files lectura.zip crawl_submit.py \
+        --corpus <dir> --warehouse <dir> --rounds R [--use-bloom]
 """
 
 from __future__ import annotations
 
 import argparse
+import json
 import os
 import time
 
@@ -23,7 +25,7 @@ from pyspark.sql import functions as F
 
 from lectura.config import CrawlConfig
 from lectura.checkpoint import RoundLog
-from lectura.extract import extract_pages, warc_fetch_extract
+from lectura.extract import WARC_POINTER_COLS, fetch_extract
 from lectura.frontier import (dedupe_frontier, rank_per_host, recrawl_due,
                               schedule, with_budget)
 from lectura.metrics import fetch_metrics, partition_lineage
@@ -31,10 +33,11 @@ from lectura.robots import (apply_robots, build_rule_arrays,
                             build_rule_table, host_delay_table)
 from lectura.seen import (
     anti_join_seen, bloom_build, bloom_probe, bloom_upsert, cuckoo_build,
-    cuckoo_probe, cuckoo_upsert, shard_stats,
+    cuckoo_probe, cuckoo_upsert,
 )
 from lectura.tables import Warehouse
-from lectura.urlnorm import host_bucket, with_url_norm, with_url_parts
+from lectura.urlnorm import (host_bucket, url_host_bucket, with_url_norm,
+                             with_url_parts)
 
 STATE_TABLES = ["frontier", "scheduled", "seen", "seen_shards", "host_state",
                 "text", "fetch_log", "lineage", "metrics", "bloom_stats"]
@@ -142,10 +145,11 @@ def commit_bloom(wh: Warehouse, spark: SparkSession, cfg, rnd: int,
 
 
 def asof_fetch(pages: DataFrame, scheduled: DataFrame, round_ts, cfg,
-               n_scheduled: int, n_extract_parts: int):
-    """As-of fetch join (F6/F7), late-materialized. Returns
-    ``(fetch_df, is_warc)`` — the pre-extraction DataFrame plus whether it
-    carries WARC pointers (ranged-read path) or inline html.
+               n_scheduled: int, n_extract_parts: int) -> DataFrame:
+    """As-of fetch join (F6/F7), late-materialized. Returns the
+    pre-extraction DataFrame: (url, depth, score) of each winning capture
+    plus its body source — WARC pointers when the corpus has them
+    (ranged-read path), else inline html (extract.fetch_extract).
 
     Plan shape (asserted by tests/test_plans.py): pick each url's winning
     capture on a SLIM scan (url, warc_ts, capture id — a few MB through the
@@ -199,19 +203,14 @@ def asof_fetch(pages: DataFrame, scheduled: DataFrame, round_ts, cfg,
     # extraction: hosts are contiguous in corpus files, so matched pages
     # cluster in few scan partitions (a mega-host → one straggler
     # extractor) — and slim/WARC-gzipped rows make this shuffle cheap.
-    if "warc_file" in pages.columns:
-        # WARC corpus (S1b): bodies live in packfiles; fetch+extract is
-        # one fused Python pass doing ranged reads — page bytes never
-        # enter the JVM (see extract.warc_fetch_extract).
-        fetch_meta = pages.select(
-            "url", "warc_ts", "warc_file", "warc_offset", "warc_len",
-            *cap_cols
-        ).join(bc(winners), cap_keys).drop("_cap_f", "_cap_i")
-        return fetch_meta.repartition(n_extract_parts), True
-    latest = pages.select("url", "warc_ts", "html", *cap_cols).join(
+    # A WARC corpus (S1b) carries only pointers into its packfiles, so
+    # page bytes never enter the JVM.
+    body = (WARC_POINTER_COLS if "warc_file" in pages.columns
+            else ["html"])
+    fetched = pages.select("url", "warc_ts", *body, *cap_cols).join(
         bc(winners), cap_keys
     ).drop("_cap_f", "_cap_i")
-    return latest.repartition(n_extract_parts), False
+    return fetched.repartition(n_extract_parts)
 
 
 def revisit_due(fetch_log: DataFrame, text: DataFrame, cfg: CrawlConfig,
@@ -303,9 +302,7 @@ class Crawler:
 
         def rekey(df: DataFrame) -> DataFrame:
             return df.drop("host_bucket").withColumn(
-                "host_bucket",
-                host_bucket(F.lower(F.expr("parse_url(url, 'HOST')")),
-                            cfg.host_buckets),
+                "host_bucket", url_host_bucket(cfg.host_buckets)
             ).repartition(cfg.host_buckets, "host_bucket")
 
         if pages_files is not None:
@@ -434,9 +431,7 @@ class Crawler:
         """Verify (on a bounded sample) that the adopted corpus's recorded
         host_bucket matches this config's hash + fan-out. Data-derived —
         no reliance on sidecar metadata being kept in sync."""
-        expected = host_bucket(
-            F.lower(F.expr("parse_url(url, 'HOST')")), self.cfg.host_buckets
-        )
+        expected = url_host_bucket(self.cfg.host_buckets)
         mismatches = (
             self.wh.read("pages").select("url", "host_bucket").limit(sample)
             .filter(F.col("host_bucket") != expected)
@@ -571,14 +566,11 @@ class Crawler:
         n_extract_parts = max(
             64, int(spark.conf.get("spark.sql.shuffle.partitions", "32")) * 4
         )
-        fetch_df, is_warc = asof_fetch(
-            pages, scheduled, round_ts, cfg, n_scheduled, n_extract_parts
+        extract_df = fetch_extract(
+            asof_fetch(pages, scheduled, round_ts, cfg, n_scheduled,
+                       n_extract_parts),
+            html_gzip=cfg.html_gzip,
         )
-        if is_warc:
-            extract_df = warc_fetch_extract(fetch_df)
-        else:
-            # Fused extraction (X4) — html crosses to Python exactly once.
-            extract_df = extract_pages(fetch_df, gzipped=cfg.html_gzip)
         # Materialize the extraction ONCE as the text sink itself (S7) and
         # re-read it (column-pruned parquet, round pruned by row-group
         # stats) for every downstream consumer — text+links never sit in a
@@ -898,18 +890,28 @@ class Crawler:
         )
 
 
-def main() -> None:
+def main(argv: list[str] | None = None) -> None:
     ap = argparse.ArgumentParser(description="lectura crawl (spark-submit entry)")
     ap.add_argument("--warehouse", required=True)
+    ap.add_argument("--corpus", default=None,
+                    help="dir with pages/seeds/robots parquet (as written by "
+                         "synth_spark.write_corpus); needed only to "
+                         "initialize a fresh warehouse")
     ap.add_argument("--rounds", type=int, default=3)
-    ap.add_argument("--n-urls", type=int, default=100_000)
-    ap.add_argument("--n-hosts", type=int, default=200)
+    ap.add_argument("--master", default=None)
+    ap.add_argument("--max-round-urls", type=int, default=10_000)
+    ap.add_argument("--max-per-host", type=int,
+                    default=CrawlConfig.max_per_host)
+    ap.add_argument("--default-delay", type=float,
+                    default=CrawlConfig.default_delay)
+    ap.add_argument("--round-seconds", type=float,
+                    default=CrawlConfig.round_seconds)
+    ap.add_argument("--seen-capacity", type=int,
+                    default=CrawlConfig.seen_capacity)
     ap.add_argument("--use-bloom", action="store_true")
     ap.add_argument("--seen-filter", default="bloom",
                     choices=["bloom", "cuckoo"],
                     help="approximate seen-set backend (with --use-bloom)")
-    ap.add_argument("--master", default=None)
-    ap.add_argument("--max-round-urls", type=int, default=10_000)
     ap.add_argument("--recrawl-rounds", type=int, default=0,
                     help="revisit rounds appended after the discovery "
                          "rounds (SEMANTICS.md §16)")
@@ -917,26 +919,50 @@ def main() -> None:
                     help="recrawl estimator clamp floor (seconds)")
     ap.add_argument("--recrawl-max-s", type=float, default=30.0 * 86400.0,
                     help="recrawl estimator clamp ceiling (seconds)")
-    args = ap.parse_args()
+    args = ap.parse_args(argv)
 
     from lectura.session import get_spark
-    from lectura.synth_spark import materialize_corpus
-    from lectura.synth import SynthParams
 
     spark = get_spark(master=args.master, app_name="lectura-crawl")
     wh = Warehouse(args.warehouse, spark)
-    cfg = CrawlConfig(use_bloom=args.use_bloom,
+    cfg = CrawlConfig(max_round_urls=args.max_round_urls,
+                      max_per_host=args.max_per_host,
+                      default_delay=args.default_delay,
+                      round_seconds=args.round_seconds,
+                      seen_capacity=args.seen_capacity,
+                      use_bloom=args.use_bloom,
                       seen_filter=args.seen_filter,
-                      max_round_urls=args.max_round_urls,
                       recrawl_min_interval_s=args.recrawl_min_s,
                       recrawl_max_interval_s=args.recrawl_max_s)
     crawler = Crawler(spark, wh, cfg)
+    t0 = time.time()
     if not wh.exists("pages"):
-        p = SynthParams(n_urls=args.n_urls, n_hosts=args.n_hosts)
-        pages, seeds, robots = materialize_corpus(spark, p)
-        crawler.init_tables(pages, seeds, robots)
-    for s in crawler.run(args.rounds, recrawl_rounds=args.recrawl_rounds):
-        print(s)
+        if args.corpus is None:
+            ap.error("--corpus is required to initialize a new warehouse")
+        pages_dir = os.path.join(args.corpus, "pages")
+        pages = spark.read.parquet(pages_dir)
+        # adopt the immutable corpus zero-copy when it is pre-bucketed
+        pages_files = None
+        if "host_bucket" in pages.columns:
+            pages_files = sorted(os.path.join(pages_dir, f)
+                                 for f in os.listdir(pages_dir)
+                                 if f.endswith(".parquet"))
+        crawler.init_tables(pages,
+                            spark.read.parquet(f"{args.corpus}/seeds"),
+                            spark.read.parquet(f"{args.corpus}/robots"),
+                            pages_files=pages_files)
+    init_s = time.time() - t0
+    t0 = time.time()
+    stats = crawler.run(args.rounds, recrawl_rounds=args.recrawl_rounds)
+    crawl_s = time.time() - t0
+    for s in stats:
+        print(json.dumps(s), flush=True)
+    print(json.dumps({
+        "init_s": round(init_s, 3),
+        "crawl_s": round(crawl_s, 3),
+        "scheduled": sum(s["scheduled"] for s in stats),
+        "extracted": sum(s["extracted"] for s in stats),
+    }), flush=True)
 
 
 if __name__ == "__main__":

@@ -2,10 +2,9 @@
 per-row Python" = Arrow-batched UDFs; the HTML parsing itself is the pure
 spec function applied per document inside each batch).
 
-`extract_pages` is the fused X4 pass: one Arrow round-trip produces links +
-text + fetch metrics together, so MB-scale html bodies cross the
-JVM↔Python boundary exactly once and never again (the html column is
-dropped on the way out).
+`fetch_extract` is the crawl's one fused fetch + X4 pass: one Arrow
+round-trip produces links + text + fetch metrics together, whether the
+page bodies are read from WARC packfiles or arrive inline.
 """
 
 from __future__ import annotations
@@ -18,7 +17,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from lectura.pure.enrich import ENRICH_COLS, enrich_text
-from lectura.pure.extract import extract_links, extract_page, extract_text
+from lectura.pure.extract import extract_page
 
 EXTRACT_SCHEMA = (
     "url string, depth int, score double, text string, links array<string>, "
@@ -48,40 +47,66 @@ def _enriched_frame(pdf, texts, links, nbytes, cache):
     return _pd.DataFrame(out)
 
 
-def extract_pages(fetched: DataFrame, gzipped: bool = False) -> DataFrame:
-    """X4: (url, depth, score, html) -> (url, depth, score, text, links,
-    n_links, bytes). Fused mapInPandas — html never leaves this stage.
+WARC_POINTER_COLS = ["warc_file", "warc_offset", "warc_len"]
 
-    `gzipped=True` means page bodies are stored WARC-style (gzip member per
-    page) and are inflated here, inside the Python worker: at corpus scale
-    this cuts parquet scan + broadcast bandwidth ~4× and converts it into
-    per-core decompression work that scales with executors. `bytes` always
-    reports the DECOMPRESSED body size (fetch-metric semantics)."""
+
+def fetch_extract(fetched: DataFrame, html_gzip: bool = False) -> DataFrame:
+    """Fused fetch + extract (S1b + X4): (url, depth, score, body source)
+    -> EXTRACT_SCHEMA in one mapInPandas pass, so page bytes cross the
+    JVM↔Python boundary at most once and never come back.
+
+    The body source is decided once per call from the input columns:
+
+    - ``warc_file/warc_offset/warc_len`` (WARC-pointer corpus, the
+      Common-Crawl-native layout): each Python worker preads the gzip
+      member for its rows through cached file handles and inflates it —
+      page bytes NEVER enter the JVM, and a round reads only the
+      scheduled bodies instead of decoding a full html column;
+    - ``html`` (inline corpus): the body is the column value, inflated
+      here when ``html_gzip`` is set (gzip member per page).
+
+    `bytes` always reports the DECOMPRESSED body size (fetch-metric
+    semantics)."""
     import gzip as _gzip
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cache: dict = {}
-        for pdf in batches:
-            texts, links, nbytes = [], [], []
-            for url, html in zip(pdf["url"], pdf["html"]):
-                b = bytes(html) if html is not None else b""
-                if gzipped and b:
-                    b = _gzip.decompress(b)
-                t, ls = extract_page(b, url)
-                texts.append(t)
-                links.append(ls)
-                nbytes.append(len(b))
-            yield _enriched_frame(pdf, texts, links, nbytes, cache)
+    warc = "warc_file" in fetched.columns
 
-    return fetched.select("url", "depth", "score", "html").mapInPandas(
+    def warc_bodies(pdf, handles):
+        for wf, off, ln in zip(pdf["warc_file"], pdf["warc_offset"],
+                               pdf["warc_len"]):
+            fh = handles.get(wf)
+            if fh is None:
+                fh = handles[wf] = open(wf, "rb")
+            fh.seek(int(off))
+            yield _gzip.decompress(fh.read(int(ln)))
+
+    def html_bodies(pdf, handles):
+        for html in pdf["html"]:
+            b = bytes(html) if html is not None else b""
+            yield _gzip.decompress(b) if html_gzip and b else b
+
+    bodies = warc_bodies if warc else html_bodies
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        handles: dict[str, object] = {}
+        cache: dict = {}
+        try:
+            for pdf in batches:
+                texts, links, nbytes = [], [], []
+                for url, b in zip(pdf["url"], bodies(pdf, handles)):
+                    t, ls = extract_page(b, url)
+                    texts.append(t)
+                    links.append(ls)
+                    nbytes.append(len(b))
+                yield _enriched_frame(pdf, texts, links, nbytes, cache)
+        finally:
+            for fh in handles.values():
+                fh.close()
+
+    body_cols = WARC_POINTER_COLS if warc else ["html"]
+    return fetched.select("url", "depth", "score", *body_cols).mapInPandas(
         run, EXTRACT_SCHEMA
     )
-
-
-@F.pandas_udf(T.StringType())
-def extract_text_udf(html: pd.Series) -> pd.Series:
-    """X2 standalone (golden/byte-exactness tests)."""
-    return html.map(lambda b: extract_text(bytes(b)) if b is not None else None)
 
 
 @F.pandas_udf(T.ArrayType(T.StructType([
@@ -98,59 +123,3 @@ def extract_anchors_udf(html: pd.Series, base_url: pd.Series) -> pd.Series:
                         else b, u) if b is not None else []
         for b, u in zip(html, base_url)
     ])
-
-
-@F.pandas_udf(T.ArrayType(T.StringType()))
-def extract_links_udf(html: pd.Series, base_url: pd.Series) -> pd.Series:
-    """X1 standalone."""
-    return pd.Series(
-        [
-            extract_links(bytes(b), u) if b is not None else []
-            for b, u in zip(html, base_url)
-        ]
-    )
-
-
-WARC_FETCH_SCHEMA = EXTRACT_SCHEMA
-
-
-def warc_fetch_extract(fetch_meta: DataFrame, gzipped: bool = True) -> DataFrame:
-    """Fused WARC fetch + extract (S1b + X4): input rows carry (url, depth,
-    score, warc_file, warc_offset, warc_len); each Python worker preads the
-    gzip member for its rows, inflates, and extracts — page bytes NEVER
-    enter the JVM. This is the Common-Crawl-native fetch path: at 100 TB
-    the corpus is WARC segments + a slim parquet index, and a round reads
-    only the ≤max_round_urls scheduled bodies (ranged reads) instead of
-    decoding the full html column of every row just to evaluate the fetch
-    join — the latter is memory-bandwidth-bound and stops scaling long
-    before 32 cores."""
-    import gzip as _gzip
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        handles: dict[str, object] = {}
-        cache: dict = {}
-        try:
-            for pdf in batches:
-                texts, links, nbytes = [], [], []
-                for url, wf, off, ln in zip(
-                    pdf["url"], pdf["warc_file"], pdf["warc_offset"],
-                    pdf["warc_len"]
-                ):
-                    fh = handles.get(wf)
-                    if fh is None:
-                        fh = handles[wf] = open(wf, "rb")
-                    fh.seek(int(off))
-                    b = fh.read(int(ln))
-                    if gzipped:
-                        b = _gzip.decompress(b)
-                    t, ls = extract_page(b, url)
-                    texts.append(t)
-                    links.append(ls)
-                    nbytes.append(len(b))
-                yield _enriched_frame(pdf, texts, links, nbytes, cache)
-        finally:
-            for fh in handles.values():
-                fh.close()
-
-    cols = ["url", "depth", "score", "warc_file", "warc_offset", "warc_len"]
-    return fetch_meta.select(*cols).mapInPandas(run, WARC_FETCH_SCHEMA)

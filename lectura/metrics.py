@@ -69,11 +69,3 @@ def fetch_metrics(fetch_log: DataFrame) -> DataFrame:
         F.sum("bytes").alias("total_bytes"),
         F.sum("n_links").alias("total_links"),
     )
-
-
-def round_rollup(fetch_log: DataFrame) -> DataFrame:
-    """A3: GROUPING SETS rollup (round) / (round, host) in one pass."""
-    return fetch_log.rollup("round", "host").agg(
-        F.count("*").alias("n_fetches"),
-        F.sum("bytes").alias("total_bytes"),
-    )

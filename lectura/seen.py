@@ -12,8 +12,6 @@ a vectorized membership UDF. The exact-set path (D4/D5) is a plain
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -257,25 +255,6 @@ def cuckoo_upsert(shards: DataFrame, urls: DataFrame, n_shards: int,
         .cogroup(shards.groupBy("shard_id"))
         .applyInPandas(upsert, SHARD_SCHEMA)
     )
-
-
-def cuckoo_merge(shards: DataFrame) -> DataFrame:
-    """D2 parity: union same-shard filters across rounds."""
-
-    def merge_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-        table, stash = cuckoocore.merge(list(pdf["bits"]))
-        return pd.DataFrame(
-            {
-                "shard_id": [int(pdf["shard_id"].iloc[0])],
-                "bits": [cuckoocore.serialize(table, stash)],
-                "n_inserted": [int(pdf["n_inserted"].sum())],
-                "m_bits": [table.shape[0]],
-                "k": [cuckoocore.SLOTS],
-                "capacity": [int(pdf["capacity"].max())],
-            }
-        )
-
-    return shards.groupBy("shard_id").applyInPandas(merge_shard, SHARD_SCHEMA)
 
 
 def cuckoo_probe(cand: DataFrame, shards: DataFrame,

@@ -8,12 +8,14 @@ the oracle crawler builds in a Python loop at test scale.
 
 from __future__ import annotations
 
+import os
 from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from lectura.synth import SynthParams, make_robots, make_seeds, page_records
+from lectura.urlnorm import url_host_bucket
 
 PAGES_SCHEMA = (
     "url string, warc_ts timestamp, html binary, text string, lang string"
@@ -21,26 +23,14 @@ PAGES_SCHEMA = (
 
 
 def pages_df(spark: SparkSession, p: SynthParams,
-             parallelism: int | None = None,
-             gzip_html: bool = False) -> DataFrame:
-    """gzip_html=True stores bodies WARC-style (one gzip member per page,
-    as Common Crawl does) — the bench/cluster corpus layout; `text` is
-    still derived from the raw bytes so the X2 byte-exact invariant is
-    unchanged."""
-    import gzip as _gzip
-
+             parallelism: int | None = None) -> DataFrame:
     bounds = p.host_bounds()
     n_parts = parallelism or max(8, p.n_urls // 4000)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            rows = []
-            for i in pdf["id"]:
-                for r in page_records(int(i), p, bounds):
-                    if gzip_html:
-                        r = dict(r)
-                        r["html"] = _gzip.compress(r["html"], compresslevel=1)
-                    rows.append(r)
+            rows = [r for i in pdf["id"]
+                    for r in page_records(int(i), p, bounds)]
             yield pd.DataFrame(
                 rows, columns=["url", "warc_ts", "html", "text", "lang"]
             )
@@ -52,17 +42,22 @@ def pages_df(spark: SparkSession, p: SynthParams,
 
 
 def materialize_corpus(
-    spark: SparkSession, p: SynthParams, gzip_html: bool = False
+    spark: SparkSession, p: SynthParams
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """(pages, seeds, robots) DataFrames for Crawler.init_tables."""
-    bounds = p.host_bounds()
+    return (pages_df(spark, p), *_seeds_robots(spark, p))
+
+
+def _seeds_robots(spark: SparkSession,
+                  p: SynthParams) -> tuple[DataFrame, DataFrame]:
     seeds = spark.createDataFrame(
-        pd.DataFrame(make_seeds(p, bounds)), schema="url string, score double"
+        pd.DataFrame(make_seeds(p, p.host_bounds())),
+        schema="url string, score double",
     )
     robots = spark.createDataFrame(
         pd.DataFrame(make_robots(p)), schema="host string, body string"
     )
-    return pages_df(spark, p, gzip_html=gzip_html), seeds, robots
+    return seeds, robots
 
 
 WARC_META_SCHEMA = (
@@ -79,21 +74,18 @@ def materialize_corpus_warc(
     packfiles of concatenated gzip members + a SLIM parquet index
     (url, warc_ts, lang, warc_file, warc_offset, warc_len). The crawl's
     fetch is then a ranged read of exactly the scheduled bodies
-    (lectura/extract.py warc_fetch_extract) instead of a full html-column
-    decode per round. Each input partition writes one packfile; content
+    (lectura/extract.py fetch_extract) instead of a full html-column
+    decode per round; write_corpus persists it for `lectura.crawl
+    --corpus`. Each input partition writes one packfile; content
     is a pure function of the page index so retries rewrite identical
     bytes (idempotent)."""
     import gzip as _gzip
-    import os
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
 
     os.makedirs(warc_dir, exist_ok=True)
     bounds = p.host_bounds()
     n_parts = parallelism or max(8, p.n_urls // 4000)
 
-    def gen(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
+    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from pyspark import TaskContext
 
         pid = TaskContext.get().partitionId()
@@ -117,7 +109,7 @@ def materialize_corpus_warc(
                             }
                         )
                         off += len(blob)
-        yield _pd.DataFrame(
+        yield pd.DataFrame(
             rows, columns=["url", "warc_ts", "lang", "warc_file",
                            "warc_offset", "warc_len"]
         )
@@ -126,10 +118,48 @@ def materialize_corpus_warc(
         spark.range(0, p.n_urls, numPartitions=n_parts)
         .mapInPandas(gen, WARC_META_SCHEMA)
     )
-    seeds = spark.createDataFrame(
-        pd.DataFrame(make_seeds(p, bounds)), schema="url string, score double"
-    )
-    robots = spark.createDataFrame(
-        pd.DataFrame(make_robots(p)), schema="host string, body string"
-    )
-    return meta, seeds, robots
+    return (meta, *_seeds_robots(spark, p))
+
+
+def write_corpus(spark: SparkSession, p: SynthParams, out: str,
+                 host_buckets: int) -> None:
+    """Write a WARC corpus in the layout `python -m lectura.crawl --corpus
+    <out>` reads: packfiles under out/warc, the slim page index under
+    out/pages pre-keyed by host_bucket (so Crawler.init_tables adopts it
+    zero-copy instead of rewriting it), and out/seeds, out/robots.
+    `host_buckets` must equal the crawl's CrawlConfig.host_buckets, else
+    init_tables detects the mismatch and falls back to a rewrite."""
+    out = os.path.abspath(out)  # packfile paths are stored in the index
+    pages, seeds, robots = materialize_corpus_warc(spark, p, f"{out}/warc")
+    pages.withColumn("host_bucket", url_host_bucket(host_buckets)).write \
+        .mode("overwrite").parquet(f"{out}/pages")
+    seeds.write.mode("overwrite").parquet(f"{out}/seeds")
+    robots.write.mode("overwrite").parquet(f"{out}/robots")
+
+
+def main(argv: list[str] | None = None) -> None:
+    import argparse
+
+    from lectura.config import CrawlConfig
+    from lectura.session import get_spark
+
+    ap = argparse.ArgumentParser(
+        description="write a synthetic WARC corpus for lectura.crawl --corpus")
+    ap.add_argument("--out", required=True)
+    ap.add_argument("--n-urls", type=int, default=100_000,
+                    help="hosts = n/100 and seeds = n/5 (bench.py's recipe)")
+    ap.add_argument("--body-kb", type=float, default=48.0)
+    ap.add_argument("--master", default=None)
+    args = ap.parse_args(argv)
+
+    spark = get_spark(master=args.master, app_name="lectura-synth")
+    n = args.n_urls
+    p = SynthParams(n_urls=n, n_hosts=max(50, n // 100),
+                    n_seeds=max(200, n // 5), body_kb=args.body_kb,
+                    with_text=False)
+    write_corpus(spark, p, args.out, CrawlConfig().host_buckets)
+    spark.stop()
+
+
+if __name__ == "__main__":
+    main()

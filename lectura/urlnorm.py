@@ -91,11 +91,6 @@ def canonicalize_udf(urls: pd.Series) -> pd.Series:
     return urls.map(canonicalize_url, na_action="ignore")
 
 
-@F.pandas_udf(T.StringType())
-def host_reverse_key_udf(canon_urls: pd.Series) -> pd.Series:
-    return canon_urls.map(host_reverse_key, na_action="ignore")
-
-
 def url_key(url: Column | str) -> Column:
     """Stable 64-bit key of the canonical URL (U4) — JVM-side xxhash64."""
     return F.xxhash64(url)
@@ -104,6 +99,12 @@ def url_key(url: Column | str) -> Column:
 def host_bucket(host: Column | str, buckets: int) -> Column:
     """Partition key for pages/frontier tables (U5)."""
     return F.pmod(F.xxhash64(host), F.lit(buckets)).cast("int")
+
+
+def url_host_bucket(buckets: int) -> Column:
+    """host_bucket of the raw `url` column's lower-cased host — the pages
+    partition key (Crawler.init_tables, synth_spark.write_corpus)."""
+    return host_bucket(F.lower(F.expr("parse_url(url, 'HOST')")), buckets)
 
 
 def salt(url: Column | str, buckets: int) -> Column:

@@ -71,17 +71,6 @@ def random_planes(n_planes: int, dim: int, seed: int = 42) -> list[list[float]]:
     return [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(n_planes)]
 
 
-def lsh_bucket(df: DataFrame, planes: list[list[float]],
-               vec_col: str = "embedding") -> DataFrame:
-    """Sign-bit bucket id per row: bit i = 1 iff v·plane_i ≥ 0."""
-    bucket = F.lit(0).cast("long")
-    for i, p in enumerate(planes):
-        plit = F.array(*[F.lit(float(x)) for x in p])
-        bucket = bucket + F.when(_dot(F.col(vec_col), plit) >= 0,
-                                 F.lit(1 << i).cast("long")).otherwise(F.lit(0))
-    return df.withColumn("bucket", bucket)
-
-
 def lsh_buckets_multi(df: DataFrame, tables: list[list[list[float]]],
                       vec_col: str = "embedding") -> DataFrame:
     """(row…, table, bucket) — one row per (vector, LSH table). At scale

@@ -23,7 +23,8 @@ budget join → salted per-host rank → global deterministic cap) over
 Phase `round` — a full crawl (schedule → as-of fetch join → pandas-UDF
 extract → sinks) over a 10^7-URL / ~1 KB-page WARC corpus, one decade
 above the 10^6-URL headline recipe, at an n/4 round cap (2.5M at 10^7 —
-12× the headline's). Reports urls/s for the whole pipeline via bench_worker.
+12× the headline's). Reports urls/s for the whole pipeline through the
+spark-submit entry (`python -m lectura.crawl --corpus`).
 
 Usage:
   python scripts/bench_crawl_scale.py --phase schedule [--n 100000000]
@@ -58,8 +59,17 @@ def _n_hosts(n: int) -> int:
 
 
 def _env() -> dict:
+    """Leg subprocess env. LECTURA_EVLOG=<dir> turns the Spark event log
+    on for every leg (per-job/stage timings for profiling runs)."""
     env = dict(os.environ)
-    env["PYSPARK_SUBMIT_ARGS"] = JVM
+    confs = ""
+    evlog = os.environ.get("LECTURA_EVLOG")
+    if evlog:
+        os.makedirs(evlog, exist_ok=True)
+        confs = ("--conf spark.eventLog.enabled=true "
+                 f"--conf spark.eventLog.dir={evlog} "
+                 "--conf spark.eventLog.compress=false ")
+    env["PYSPARK_SUBMIT_ARGS"] = confs + JVM
     env["PYTHONPATH"] = REPO + os.pathsep + env.get("PYTHONPATH", "")
     return env
 
@@ -122,7 +132,7 @@ def schedule_leg(master: str, root: str, cap: int) -> None:
     """One timed leg: read candidates, run the F1–F5 pipeline, WRITE the
     scheduled set (the real round materializes it), assert the planted
     arithmetic. Prints LEG_RESULT {json}."""
-    os.environ["PYSPARK_SUBMIT_ARGS"] = JVM
+    os.environ.setdefault("PYSPARK_SUBMIT_ARGS", JVM)  # set by _env()
     from pyspark.sql import functions as F
 
     from lectura.config import CrawlConfig
@@ -132,12 +142,6 @@ def schedule_leg(master: str, root: str, cap: int) -> None:
     cores = int(master.split("[")[1].rstrip("]"))
     extra = {"spark.local.dir": os.path.join(root, "sl"),
              "spark.ui.showConsoleProgress": "false"}
-    evlog = os.environ.get("LECTURA_EVLOG")
-    if evlog:  # profiling runs: per-job/stage timings via the event log
-        os.makedirs(evlog, exist_ok=True)
-        extra.update({"spark.eventLog.enabled": "true",
-                      "spark.eventLog.dir": evlog,
-                      "spark.eventLog.compress": "false"})
     spark = get_spark(master=master, app_name="crawl-scale-sched",
                       shuffle_partitions=max(8, 2 * cores),
                       extra=extra)
@@ -210,13 +214,10 @@ def run_round(n: int, root: str) -> dict:
     corpus = os.path.join(root, "corpus")
     if not os.path.exists(os.path.join(corpus, "pages", "_SUCCESS")):
         os.environ.setdefault("PYSPARK_SUBMIT_ARGS", JVM)
-        from pyspark.sql import functions as F
-
         from lectura.config import CrawlConfig
         from lectura.session import get_spark
         from lectura.synth import SynthParams
-        from lectura.synth_spark import materialize_corpus_warc
-        from lectura.urlnorm import host_bucket
+        from lectura.synth_spark import write_corpus
 
         spark = get_spark(master="local[32]", app_name="crawl-scale-gen",
                           shuffle_partitions=64,
@@ -225,15 +226,7 @@ def run_round(n: int, root: str) -> dict:
         p = SynthParams(n_urls=n, n_hosts=max(50, n // 100),
                         n_seeds=max(200, n // 5), body_kb=1.0,
                         with_text=False)
-        pages, seeds, robots = materialize_corpus_warc(
-            spark, p, os.path.join(corpus, "warc"))
-        pages = pages.withColumn(
-            "host_bucket",
-            host_bucket(F.lower(F.expr("parse_url(url, 'HOST')")),
-                        CrawlConfig().host_buckets))
-        pages.write.mode("overwrite").parquet(os.path.join(corpus, "pages"))
-        seeds.write.mode("overwrite").parquet(os.path.join(corpus, "seeds"))
-        robots.write.mode("overwrite").parquet(os.path.join(corpus, "robots"))
+        write_corpus(spark, p, corpus, CrawlConfig().host_buckets)
         gen_sec = round(time.time() - t0, 1)
         print(f"gen_sec={gen_sec}", flush=True)
         spark.stop()
@@ -243,24 +236,31 @@ def run_round(n: int, root: str) -> dict:
     wh = os.path.join(root, "wh")
     shutil.rmtree(wh, ignore_errors=True)
     s0, t0 = _steal()
-    cmd = [sys.executable, "-m", "lectura.bench_worker",
+    cmd = [sys.executable, "-m", "lectura.crawl",
            "--master", "local[32]", "--corpus", corpus, "--warehouse", wh,
            "--rounds", "3", "--max-round-urls", str(n // 4),
-           "--use-bloom", "--html-gzip", "--round-seconds", "300"]
+           "--max-per-host", "50000", "--default-delay", "0.001",
+           "--round-seconds", "300", "--seen-capacity", "20000000",
+           "--use-bloom"]
     env = _env()
-    env["LECTURA_SCRATCH"] = root
+    env["SPARK_LOCAL_DIRS"] = os.path.join(root, "sl")
     p = subprocess.run(cmd, capture_output=True, text=True, env=env,
                        cwd=REPO)
     s1, t1 = _steal()
-    for line in p.stdout.splitlines():
-        if line.startswith("BENCH_RESULT "):
-            res = json.loads(line[len("BENCH_RESULT "):])
-            res["steal_pct"] = round(100 * (s1 - s0) / (t1 - t0), 2)
-            shutil.rmtree(wh, ignore_errors=True)
-            return {"phase": "round", "n_urls": n, "body_kb": 1.0,
-                    "gen_sec": gen_sec, **res}
-    sys.stderr.write(p.stdout[-2000:] + p.stderr[-4000:])
-    raise RuntimeError("round phase worker failed")
+    lines = [json.loads(x) for x in p.stdout.splitlines()
+             if x.startswith("{")]
+    if p.returncode != 0 or not lines or "crawl_s" not in lines[-1]:
+        sys.stderr.write(p.stdout[-2000:] + p.stderr[-4000:])
+        raise RuntimeError("round phase crawl failed")
+    *rounds, summary = lines
+    shutil.rmtree(wh, ignore_errors=True)
+    return {"phase": "round", "n_urls": n, "body_kb": 1.0,
+            "gen_sec": gen_sec, **summary,
+            "rounds": {f"round{s['round']}": s["seconds"] for s in rounds},
+            "urls_per_sec": round((summary["scheduled"]
+                                   + summary["extracted"])
+                                  / summary["crawl_s"], 1),
+            "steal_pct": round(100 * (s1 - s0) / (t1 - t0), 2)}
 
 
 # ---------------------------------------------------------------------------

@@ -6,7 +6,7 @@ cluster submit ships to every executor:
 
     spark-submit --py-files lectura.zip \
         --packages org.apache.iceberg:iceberg-spark-runtime-4.1_2.13:1.8.1 \
-        crawl_submit.py --warehouse ... --rounds R --use-bloom
+        crawl_submit.py --corpus ... --warehouse ... --rounds R --use-bloom
 
 (crawl_submit.py = a 3-line driver: `from lectura.crawl import main;
 main()` — spark-submit needs a file, `-m` is not supported.)

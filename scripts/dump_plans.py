@@ -75,9 +75,10 @@ def main() -> int:
         "round", "host_bucket")
     n_sched = prev.count()
     pages = wh.read("pages")
-    fetch, is_warc = asof_fetch(pages, prev, cfg.round_ts(rnd - 1), cfg,
-                                n_scheduled=n_sched, n_extract_parts=8)
-    print(f"\n## FETCH (warc={is_warc}, n_scheduled={n_sched})\n")
+    fetch = asof_fetch(pages, prev, cfg.round_ts(rnd - 1), cfg,
+                       n_scheduled=n_sched, n_extract_parts=8)
+    print(f"\n## FETCH (warc={'warc_file' in fetch.columns}, "
+          f"n_scheduled={n_sched})\n")
     print(skeleton(fetch))
 
     # pushdown evidence for the operator contract

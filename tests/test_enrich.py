@@ -46,7 +46,7 @@ def test_empty_and_degenerate():
 def test_spark_extraction_carries_enrichment(spark, corpus):
     """Extracted rows' enrichment columns == pure recomputation from the
     extracted text (exact equality, including int64 wrap of simhash)."""
-    from lectura.extract import extract_pages
+    from lectura.extract import fetch_extract
 
     uniq: dict[str, dict] = {}
     for p in corpus["pages"]:
@@ -60,7 +60,7 @@ def test_spark_extraction_carries_enrichment(spark, corpus):
     df = spark.createDataFrame(
         pd.DataFrame(rows), schema="url string, depth int, score double, html binary"
     )
-    got = extract_pages(df).collect()
+    got = fetch_extract(df).collect()
     assert len(got) == 40
     for r in got:
         exp = enrich_text(r["text"], {})

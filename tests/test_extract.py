@@ -81,7 +81,7 @@ def test_spark_extraction_matches_pure(spark, corpus):
     """X2/X1 through the fused Arrow pass == pure functions, byte-exact."""
     import pandas as pd
     from pyspark.sql import functions as F
-    from lectura.extract import extract_pages
+    from lectura.extract import fetch_extract
 
     uniq = {}
     for r in corpus["pages"]:
@@ -95,7 +95,7 @@ def test_spark_extraction_matches_pure(spark, corpus):
     ).withColumn("depth", F.lit(0)).withColumn("score", F.lit(1.0))
     got = {
         r.url: (r.text, tuple(r.links))
-        for r in extract_pages(df).collect()
+        for r in fetch_extract(df).collect()
     }
     for row in rows:
         text, links = got[row["url"]]
@@ -104,14 +104,16 @@ def test_spark_extraction_matches_pure(spark, corpus):
         assert list(links) == extract_links(row["html"], row["url"])
 
 
-def test_gzip_corpus_extraction_identical(spark, corpus):
-    """WARC-style gzipped bodies (bench corpus layout) must extract to
-    byte-identical text/links vs the raw-html path (B:15)."""
+def test_gzip_corpus_extraction_identical(spark, corpus, tmp_path):
+    """The three body sources of the fused fetch+extract pass — raw inline
+    html, gzipped inline html, and WARC pointers (gzip members ranged-read
+    from a packfile, the bench corpus layout) — must extract to
+    byte-identical text/links/bytes (B:15)."""
     import gzip
 
     import pandas as pd
 
-    from lectura.extract import extract_pages
+    from lectura.extract import fetch_extract
 
     uniq: dict[str, dict] = {}
     for p in corpus["pages"]:
@@ -122,18 +124,33 @@ def test_gzip_corpus_extraction_identical(spark, corpus):
         {"url": p["url"], "depth": 0, "score": 1.0, "html": p["html"]}
         for p in uniq.values()
     ]
-    raw = spark.createDataFrame(
-        pd.DataFrame(rows), schema="url string, depth int, score double, html binary"
-    )
+    schema = "url string, depth int, score double, html binary"
+    raw = spark.createDataFrame(pd.DataFrame(rows), schema=schema)
     gz_rows = [dict(r, html=gzip.compress(r["html"], 1)) for r in rows]
-    gz = spark.createDataFrame(
-        pd.DataFrame(gz_rows), schema="url string, depth int, score double, html binary"
+    gz = spark.createDataFrame(pd.DataFrame(gz_rows), schema=schema)
+    pack = str(tmp_path / "seg-00000.warc.gz")
+    ptr_rows, off = [], 0
+    with open(pack, "wb") as f:
+        for r in gz_rows:
+            f.write(r["html"])
+            ptr_rows.append({"url": r["url"], "depth": 0, "score": 1.0,
+                             "warc_file": pack, "warc_offset": off,
+                             "warc_len": len(r["html"])})
+            off += len(r["html"])
+    warc = spark.createDataFrame(
+        pd.DataFrame(ptr_rows),
+        schema="url string, depth int, score double, warc_file string, "
+               "warc_offset long, warc_len int",
     )
-    a = {r["url"]: (r["text"], tuple(r["links"]), r["bytes"])
-         for r in extract_pages(raw).collect()}
-    b = {r["url"]: (r["text"], tuple(r["links"]), r["bytes"])
-         for r in extract_pages(gz, gzipped=True).collect()}
-    assert a == b and len(a) == 50
+
+    def extracted(df, **kw):
+        return {r["url"]: (r["text"], tuple(r["links"]), r["bytes"])
+                for r in fetch_extract(df, **kw).collect()}
+
+    a = extracted(raw)
+    assert len(a) == 50
+    assert extracted(gz, html_gzip=True) == a
+    assert extracted(warc) == a
 
 
 def test_extract_anchors_spec_and_summary(spark):

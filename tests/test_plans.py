@@ -149,10 +149,9 @@ def test_warc_fetch_plan_no_wide_exchange_and_broadcasts(spark, tmp_path):
     """WARC path: every Exchange moves only slim pointer columns; the
     winner/scheduled joins are broadcast when under the gate."""
     pages = _pages_table(spark, tmp_path, warc=True)
-    df, is_warc = asof_fetch(pages, _sched(spark),
-                             pd.Timestamp("2026-01-01"), CrawlConfig(),
-                             n_scheduled=50, n_extract_parts=8)
-    assert is_warc
+    df = asof_fetch(pages, _sched(spark), pd.Timestamp("2026-01-01"),
+                    CrawlConfig(), n_scheduled=50, n_extract_parts=8)
+    assert "warc_file" in df.columns and "html" not in df.columns
     plan = plan_of(df)
     assert "BroadcastHashJoin" in plan
     for cols in exchange_inputs(plan):
@@ -166,8 +165,8 @@ def test_warc_fetch_plan_two_broadcast_builds(spark, tmp_path):
     scheduled join-back. A third BroadcastExchange means the join-back
     crept back in (one broadcast build per round is serial latency)."""
     pages = _pages_table(spark, tmp_path, warc=True)
-    df, _ = asof_fetch(pages, _sched(spark), pd.Timestamp("2026-01-01"),
-                       CrawlConfig(), n_scheduled=50, n_extract_parts=8)
+    df = asof_fetch(pages, _sched(spark), pd.Timestamp("2026-01-01"),
+                    CrawlConfig(), n_scheduled=50, n_extract_parts=8)
     plan = plan_of(df)
     n_builds = len(
         [b for b in re.split(r"\n\(\d+\) ", plan)
@@ -182,10 +181,9 @@ def test_html_fetch_plan_shuffles_html_only_final_roundrobin(spark, tmp_path):
     hash/single-partition Exchange; the one permitted html shuffle is the
     final bounded round-robin redistribution before extraction."""
     pages = _pages_table(spark, tmp_path, warc=False)
-    df, is_warc = asof_fetch(pages, _sched(spark),
-                             pd.Timestamp("2026-01-01"), CrawlConfig(),
-                             n_scheduled=50, n_extract_parts=8)
-    assert not is_warc
+    df = asof_fetch(pages, _sched(spark), pd.Timestamp("2026-01-01"),
+                    CrawlConfig(), n_scheduled=50, n_extract_parts=8)
+    assert "html" in df.columns and "warc_file" not in df.columns
     plan = plan_of(df)
     for block in re.split(r"\n\(\d+\) ", plan):
         if not block.startswith("Exchange"):
@@ -210,11 +208,11 @@ def test_html_fetch_plan_gated_broadcast_off(spark, tmp_path):
             df.explain(extended=True)
         return buf.getvalue().split("== Physical Plan ==")[0]
 
-    gated, _ = asof_fetch(pages, _sched(spark), pd.Timestamp("2026-01-01"),
-                          CrawlConfig(broadcast_max_rows=0),
-                          n_scheduled=50, n_extract_parts=8)
-    hinted, _ = asof_fetch(pages, _sched(spark), pd.Timestamp("2026-01-01"),
-                           CrawlConfig(), n_scheduled=50, n_extract_parts=8)
+    gated = asof_fetch(pages, _sched(spark), pd.Timestamp("2026-01-01"),
+                       CrawlConfig(broadcast_max_rows=0),
+                       n_scheduled=50, n_extract_parts=8)
+    hinted = asof_fetch(pages, _sched(spark), pd.Timestamp("2026-01-01"),
+                        CrawlConfig(), n_scheduled=50, n_extract_parts=8)
     assert "ResolvedHint" not in logical(gated)
     assert "ResolvedHint" in logical(hinted)
 

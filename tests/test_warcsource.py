@@ -33,7 +33,7 @@ def test_warc_source_roundtrip_byte_exact(spark, warc_corpus):
            for r in df.collect()}
     want = {r.url: (hashlib.sha256(r.html).hexdigest(), r.warc_ts,
                     r.lang)
-            for r in pages_df(spark, p, gzip_html=False).collect()}
+            for r in pages_df(spark, p).collect()}
     assert got == want and len(got) > 100
 
 
