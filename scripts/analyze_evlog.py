@@ -1,5 +1,7 @@
 """Summarize a Spark event log: per-job wall time + executor task time,
-grouped by spark.job.description (set per phase/sink by lectura.crawl).
+grouped by spark.job.description (set per phase/sink by lectura.crawl),
+and a census of Python vs JVM tasks per description — every task of a
+Python-executing stage pays a fixed worker round trip whatever its rows.
 Usage: python scripts/analyze_evlog.py <evlog-file-or-dir>"""
 
 from __future__ import annotations
@@ -8,6 +10,25 @@ import json
 import os
 import sys
 from collections import defaultdict
+
+# Physical operators whose stages run rows through a PySpark worker; the
+# event log names them in each RDD's `Scope`.
+PYTHON_SCOPES = frozenset({
+    "MapInPandas", "FlatMapCoGroupsInPandas", "FlatMapGroupsInPandas",
+    "ArrowEvalPython", "BatchEvalPython", "MapInArrow",
+})
+
+
+def python_scopes(stage_info: dict) -> set[str]:
+    """Names of the Python operators among a stage's RDD scopes."""
+    names = set()
+    for rdd in stage_info.get("RDD Info", []):
+        scope = rdd.get("Scope")
+        if scope:
+            name = json.loads(scope).get("name", "")
+            if name in PYTHON_SCOPES:
+                names.add(name)
+    return names
 
 
 def main() -> None:
@@ -18,7 +39,9 @@ def main() -> None:
         path = max(files, key=os.path.getmtime)
     jobs = {}
     stage_task_ms = defaultdict(float)
+    stage_tasks = defaultdict(int)
     stage_names = {}
+    stage_py = {}
     stage_to_job = {}
     with open(path) as fh:
         for line in fh:
@@ -43,9 +66,11 @@ def main() -> None:
                 ti = e.get("Task Info", {})
                 stage_task_ms[sid] += (ti.get("Finish Time", 0)
                                        - ti.get("Launch Time", 0))
+                stage_tasks[sid] += 1
             elif ev == "SparkListenerStageCompleted":
                 si = e["Stage Info"]
                 stage_names[si["Stage ID"]] = si["Stage Name"].split("\n")[0]
+                stage_py[si["Stage ID"]] = python_scopes(si)
 
     by_desc = defaultdict(lambda: [0.0, 0.0, 0])
     print(f"{'job':>4} {'wall_s':>8} {'task_s':>9}  description")
@@ -73,6 +98,21 @@ def main() -> None:
         desc = jobs.get(jid, {}).get("desc", "?")
         print(f"stage {sid:>4} {ms/1000:>9.1f}s  [{desc}] "
               f"{stage_names.get(sid, '?')[:80]}")
+
+    # census: tasks of Python-executing stages vs JVM-only ones
+    census = defaultdict(lambda: [0, 0, set()])
+    for sid, n in stage_tasks.items():
+        c = census[jobs.get(stage_to_job.get(sid), {}).get("desc", "?")]
+        py = stage_py.get(sid, set())
+        c[0 if py else 1] += n
+        c[2] |= py
+    print("\n-- Python vs JVM tasks by description --")
+    print(f"{'py':>6} {'jvm':>6}  description  [python operators]")
+    for desc, (py, jvm, ops) in sorted(census.items(),
+                                       key=lambda kv: -kv[1][0]):
+        print(f"{py:>6} {jvm:>6}  {desc}  [{', '.join(sorted(ops))}]")
+    print(f"{sum(c[0] for c in census.values()):>6} "
+          f"{sum(c[1] for c in census.values()):>6}  total")
 
 
 if __name__ == "__main__":

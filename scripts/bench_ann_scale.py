@@ -13,10 +13,12 @@ probe wall should grow far slower than the decade while the recall row
 stays meaningful. The exact scan is the honest comparator and also the
 ground truth.
 
-Vectors reuse bench_semantic's hash recipe (no RNG): dim j of row i =
-(pmod(xxhash64(i * 64 + j), 2001) - 1000) / 1000. The query is row
-`--query-id`'s own vector, so the exact top-1 must be that id with
-cosine 1.0 — a self-asserting plant at every scale.
+Vectors are family-structured (synth_vectors; hash lattice, no RNG):
+row i = center(i // 16) + 0.05 * noise(i), where dim j of a lattice
+vector is (pmod(xxhash64(key * dim + j, salt), 2001) - 1000) / 1000 —
+each row has ~15 true neighbours at cosine ≈ 0.99. Each query is a
+row's own vector, so the exact top-1 must be that id with cosine 1.0 —
+a self-asserting plant at every scale.
 
 Usage: python scripts/bench_ann_scale.py [--n-small 1000000]
            [--n-big 10000000] [--dim 64] [--k 10]
@@ -28,6 +30,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import shutil
 import sys
 import time
 
@@ -104,8 +107,6 @@ def run_point(spark, n: int, dim: int, k: int, qid: int,
                               n_probe=n_probe, rerank=10 * k).collect()]
         probe_secs.append(time.time() - t0)
         recalls.append(len(set(approx) & {i for i, _ in exact}) / k)
-    df.unpersist()
-    enc.unpersist()
     return {"n": n, "gen_sec": gen_sec,
             "index_build_sec": build_sec,
             "exact_scan_sec_mean": round(sum(exact_secs) / len(qids), 2),
@@ -138,26 +139,29 @@ def main() -> int:
     scratch = os.environ.get("LECTURA_SCRATCH", "/dev/shm")
     local_dir = os.path.join(scratch, f"lectura_ann_scale_{os.getpid()}")
     os.makedirs(local_dir, exist_ok=True)
-    spark = get_spark(master=args.master, shuffle_partitions=64,
-                      extra={"spark.ui.showConsoleProgress": "false",
-                             "spark.local.dir": local_dir})
-    out = {"metric": "ann_ivfpq_scale", "dim": args.dim, "k": args.k,
-           "n_centroids": args.n_centroids, "n_probe": args.n_probe,
-           "points": []}
-    for n in (args.n_small, args.n_big):
-        out["points"].append(
-            run_point(spark, n, args.dim, args.k, args.query_id,
-                      args.n_centroids, args.n_probe))
-    small, big = out["points"]
-    out["build_wall_ratio"] = round(
-        big["index_build_sec"] / small["index_build_sec"], 2)
-    out["probe_wall_ratio"] = round(
-        big["probe_sec_mean"] / max(small["probe_sec_mean"], 1e-9), 2)
-    out["size_ratio"] = big["n"] / small["n"]
-    ok = all(p["recall_at_k_mean"] >= 0.6 for p in out["points"])
-    out["recall_ok"] = ok
-    print(json.dumps(out))
-    return 0 if ok else 1
+    try:
+        spark = get_spark(master=args.master, shuffle_partitions=64,
+                          extra={"spark.ui.showConsoleProgress": "false",
+                                 "spark.local.dir": local_dir})
+        out = {"metric": "ann_ivfpq_scale", "dim": args.dim, "k": args.k,
+               "n_centroids": args.n_centroids, "n_probe": args.n_probe,
+               "points": []}
+        for n in (args.n_small, args.n_big):
+            out["points"].append(
+                run_point(spark, n, args.dim, args.k, args.query_id,
+                          args.n_centroids, args.n_probe))
+        small, big = out["points"]
+        out["build_wall_ratio"] = round(
+            big["index_build_sec"] / small["index_build_sec"], 2)
+        out["probe_wall_ratio"] = round(
+            big["probe_sec_mean"] / max(small["probe_sec_mean"], 1e-9), 2)
+        out["size_ratio"] = big["n"] / small["n"]
+        ok = all(p["recall_at_k_mean"] >= 0.6 for p in out["points"])
+        out["recall_ok"] = ok
+        print(json.dumps(out))
+        return 0 if ok else 1
+    finally:
+        shutil.rmtree(local_dir, ignore_errors=True)
 
 
 if __name__ == "__main__":

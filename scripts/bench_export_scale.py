@@ -213,6 +213,11 @@ def main() -> int:
                          "point (default n_big // 100); 0 disables")
     ap.add_argument("--master", default="local[32]")
     args = ap.parse_args()
+    for n in (args.n_small, args.n_big):
+        if n % 100:
+            ap.error(f"--n-small/--n-big must be multiples of 100, got {n}: "
+                     "the expected survivor count n - 3*(n div 100) "
+                     "assumes whole 100-id plant blocks")
 
     # self-sufficient heap sizing (the 10^7 point OOMs the 1 g default)
     os.environ.setdefault(

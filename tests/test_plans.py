@@ -15,10 +15,11 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from lectura.config import CrawlConfig
-from lectura.crawl import asof_fetch
+from lectura.crawl import Crawler, asof_fetch, extract_fan_out
 from lectura.frontier import rank_per_host, schedule
 from lectura.robots import apply_robots
 from lectura.tables import Warehouse
+from tests.conftest import corpus_dfs
 
 
 def plan_of(df) -> str:
@@ -108,6 +109,38 @@ def test_sink_fan_in_scales_with_round_size():
     assert cfg.sink_fan_in(250_001) == 2
     assert cfg.sink_fan_in(10_000_000) == 40
     assert "coalesce(4)" not in open("lectura/crawl.py").read()
+
+
+def test_extract_fan_out_scales_with_round_size():
+    """The fetch+extract fan-out follows the round's row count: one task
+    per core for small rounds, one per Arrow batch beyond that, capped at
+    4 × shuffle.partitions (each Python task has a fixed cost)."""
+    def fan(n, par=8, parts=16, batch=1024):
+        return extract_fan_out(n, par, parts, batch)
+
+    assert fan(0) == 8
+    assert fan(150) == fan(8 * 1024) == 8
+    assert fan(9 * 1024) == 9
+    assert fan(20 * 1024 + 1) == 21
+    assert fan(64 * 1024) == fan(10**8) == 64  # the 4 × shuffle.partitions cap
+    assert fan(10**8, parts=8) == 32
+    assert fan(10**8, par=4, parts=2) == 8  # the cap wins over parallelism
+    assert fan(10**6, batch=0) == 8  # unbounded batches: one per core
+    assert fan(0, par=0, parts=0) == 1
+
+
+def test_small_round_writes_one_text_file_per_core_at_most(
+        spark, corpus, cfg, tmp_path):
+    """A round of a few dozen rows must not fan out into
+    4 × shuffle.partitions Python tasks (and as many text files)."""
+    wh = Warehouse(str(tmp_path / "wh"), spark)
+    crawler = Crawler(spark, wh, cfg)
+    crawler.init_tables(*corpus_dfs(spark, corpus))
+    crawler.run(2)
+    files = wh.files_added("text", wh.snapshot("text"))  # round 2's
+    cores = spark.sparkContext.defaultParallelism
+    assert wh.count_rows(files) > cores
+    assert len(files) <= cores, files
 
 
 def test_apply_robots_broadcasts_rules(spark):
