@@ -26,7 +26,9 @@ class CrawlConfig:
     fpp: float = 1e-3
     host_buckets: int = 32  # pages/frontier partition key fan-out
     salt_buckets: int = 8  # mega-host salting fan-out (U6/F1)
-    use_bloom: bool = False  # exact anti-join path by default at test scale
+    # Maintain an approximate seen-set filter (`seen_shards`, `bloom_stats`)
+    # beside the exact `seen` table; rounds apply only the exact set.
+    use_bloom: bool = False
     # Approximate seen-set backend when use_bloom is on: "bloom"
     # (bloomcore; ~14.4 bits/key at fpp 1e-3) or "cuckoo" (cuckoocore;
     # ~32 bits/key, FPP ~1.2e-4, supports delete). Both shard the same

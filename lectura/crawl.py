@@ -1,12 +1,15 @@
 """The crawl round loop (SURVEY.md §3.1) — flagship entry point.
 
-Each round is one batch DAG: frontier → canonicalize/dedupe → seen-filter
-(exact anti-join or partitioned bloom) → robots (broadcast rules + window)
-→ politeness budget → salted per-host rank → global deterministic top-k →
-as-of fetch join against the pages corpus → fused Arrow extraction →
-frontier(r+1)/text/metrics/seen writes → atomic round commit. The loop is
-driver-side Python (a crawl is iterative — each round feeds the next, which
-one streaming query cannot express; SURVEY.md §2.8).
+Each round is one batch DAG: frontier (already deduped and unseen) →
+robots (broadcast per-host rule arrays) → politeness budget → salted
+per-host rank → global deterministic top-k → as-of fetch join against the
+pages corpus → fused Arrow extraction → frontier(r+1) (exact anti-join
+against seen ∪ new_seen — the one place a round applies the seen set)/
+text/metrics/seen writes → atomic round commit. With use_bloom the bloom
+or cuckoo shards are maintained beside the exact set but not consulted by
+the round. The loop is driver-side Python (a crawl is iterative — each
+round feeds the next, which one streaming query cannot express;
+SURVEY.md §2.8).
 
 Run on a cluster (corpus layout: synth_spark.write_corpus):
     spark-submit --py-files lectura.zip crawl_submit.py \
@@ -31,10 +34,8 @@ from lectura.frontier import (dedupe_frontier, rank_per_host, recrawl_due,
 from lectura.metrics import fetch_metrics, partition_lineage
 from lectura.robots import (apply_robots, build_rule_arrays,
                             build_rule_table, host_delay_table)
-from lectura.seen import (
-    anti_join_seen, bloom_build, bloom_probe, bloom_upsert, cuckoo_build,
-    cuckoo_probe, cuckoo_upsert,
-)
+from lectura.seen import (bloom_build, bloom_upsert, cuckoo_build,
+                          cuckoo_upsert)
 from lectura.tables import Warehouse
 from lectura.urlnorm import (host_bucket, url_host_bucket, with_url_norm,
                              with_url_parts)
@@ -380,7 +381,7 @@ class Crawler:
         base[0] + w2·priority) or None when no directive resolves.
 
         The discovered rows then flow the NORMAL path — dedupe_frontier
-        merge with the seeds, seen-filter (D3/D5), robots verdicts,
+        merge with the seeds, robots verdicts,
         politeness, ranking — so a sitemap URL is never exempt from any
         gate. Sitemap fetches themselves touch no crawl state (not
         `seen`, no fetch_log rows): sitemaps are a discovery source,
@@ -488,7 +489,6 @@ class Crawler:
 
         spark.sparkContext.setJobDescription(f"r{rnd}:schedule")
         frontier = wh.read("frontier").filter(F.col("for_round") == rnd)
-        seen = wh.read("seen")
         rule_arrays, host_delay = self._robots_tables()
         # host_state is stored as (host, last_round) deltas appended per
         # round (no full-table rewrite); the current state is the max-merge
@@ -515,25 +515,18 @@ class Crawler:
             allowed = self._revisit_candidates(rnd)
         else:
             # Candidate set: the frontier table is INVARIANTLY written
-            # url-deduped (init_tables and next_frontier both pass through
-            # dedupe_frontier before the append; resume restores committed
-            # snapshots only), so the per-round re-dedupe would be a pure
-            # no-op shuffle+sort of the whole frontier — skip it.
-            cand = frontier.drop("for_round")
-            if cfg.use_bloom and wh.exists("seen_shards"):
-                shards = wh.read("seen_shards")
-                probe = (cuckoo_probe if cfg.seen_filter == "cuckoo"
-                         else bloom_probe)
-                cand = (
-                    probe(cand, shards, cfg.n_shards)
-                    .filter(~F.col("maybe_seen"))
-                    .drop("maybe_seen", "shard_id", "url_key")
-                )
-            else:
-                cand = anti_join_seen(cand, seen)
-
-            # robots verdicts (broadcast rules + longest-match window)
-            verdict = apply_robots(cand, rule_arrays=rule_arrays).cache()
+            # url-deduped and disjoint from `seen` (init_tables dedupes the
+            # seeds and writes an empty seen; next_frontier passes through
+            # dedupe_frontier and the exact anti-join against seen ∪
+            # new_seen before the append; resume restores committed
+            # snapshots only), so a per-round re-dedupe or seen filter
+            # would be a pure no-op over the whole frontier — and a
+            # bloom/cuckoo probe could only drop unseen urls on false
+            # positives. Skip both.
+            # robots verdicts (broadcast per-host rule arrays, longest match
+            # resolved per row)
+            verdict = apply_robots(frontier.drop("for_round"),
+                                   rule_arrays=rule_arrays).cache()
             allowed = verdict.filter(F.col("allowed")).drop("allowed")
             blocked = verdict.filter(~F.col("allowed")).select("url")
 
@@ -678,6 +671,7 @@ class Crawler:
                 .withColumn("discovered_ts", F.lit(round_ts))
             )
 
+        seen = wh.read("seen")
         if revisit:
             # Unscheduled-but-due revisits are NOT re-queued: due-ness is
             # recomputed fresh from history next revisit round, so the

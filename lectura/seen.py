@@ -5,9 +5,11 @@ Shards are disjoint hash ranges: `shard_id = pmod(xxhash64(url), n_shards)`
 `applyInPandas` (one output row per shard) and probed by joining candidates
 to their shard blob (broadcast — shards total ≤ a few GB even at the 10^10
 design point, and a round only touches shards with candidates) followed by
-a vectorized membership UDF. The exact-set path (D4/D5) is a plain
-`left_anti` join and doubles as the oracle for the bloom path's FPP bound
-(B:14).
+a vectorized membership UDF. The exact-set path (D4/D5) is the plain
+`left_anti` join the crawl runs when it writes frontier(r+1)
+(`crawl.Crawler.run_round`); it is the only seen filter a round applies,
+and the exact `seen` table doubles as the oracle for this module's FPP
+bound (B:14).
 """
 
 from __future__ import annotations
@@ -178,11 +180,6 @@ def bloom_probe(cand: DataFrame, shards: DataFrame, n_shards: int) -> DataFrame:
         .cogroup(shards.groupBy("shard_id"))
         .applyInPandas(probe_group, out_schema)
     )
-
-
-def anti_join_seen(cand: DataFrame, seen: DataFrame) -> DataFrame:
-    """D5: exact cross-round dedupe — candidates not in the seen table."""
-    return cand.join(seen.select("url"), "url", "left_anti")
 
 
 # --- cuckoo-filter backend (B:2 "Bloom/cuckoo"; lectura/pure/cuckoocore) ---

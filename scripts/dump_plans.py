@@ -40,7 +40,6 @@ def main() -> int:
     from lectura.crawl import asof_fetch
     from lectura.frontier import rank_per_host, schedule, with_budget
     from lectura.robots import apply_robots, host_delay_table
-    from lectura.seen import bloom_probe
     from lectura.session import get_spark
     from lectura.tables import Warehouse
 
@@ -56,12 +55,6 @@ def main() -> int:
         .agg(F.max("last_round").alias("last_round"))
     )
     cand = frontier.drop("for_round")
-    if wh.exists("seen_shards"):
-        cand = (
-            bloom_probe(cand, wh.read("seen_shards"), cfg.n_shards)
-            .filter(~F.col("maybe_seen"))
-            .drop("maybe_seen", "shard_id", "url_key")
-        )
     allowed = apply_robots(cand, rules).filter(F.col("allowed")).drop("allowed")
     budgeted = with_budget(allowed, host_delay_table(rules), host_state,
                            cfg, rnd, broadcast_hint=True)

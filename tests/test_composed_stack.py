@@ -8,7 +8,7 @@ Every feature is verified pairwise in its own suite (test_sitemaps,
 test_recrawl, test_export_incremental, test_audit); this file pins the
 full interaction, which is where composition bugs hide: a page reachable
 through NO seed and NO link is discovered via a sitemap, fetched in
-round 1 through the bloom probe path, its content later changes, the
+round 1 in bloom mode, its content later changes, the
 revisit rounds re-fetch and re-extract it (discovering a brand-new
 outlink), and both export paths ship exactly the revised text — with
 the mid-crawl kill/resume (ST8) preserving all of it."""

@@ -16,6 +16,7 @@ from lectura.pure.extract import extract_text
 from lectura.pure.urlnorm import canonicalize_url
 from lectura.tables import Warehouse
 from tests.conftest import corpus_dfs
+from tests.test_e2e import assert_frontier_unseen
 
 ROUNDS = 2
 RECRAWL = 3
@@ -100,6 +101,7 @@ def assert_revisit_equivalent(crawler, oracle):
     fo = sorted((r["url"], r["depth"], r["score"])
                 for r in oracle.frontier_final)
     assert ff == fo
+    assert_frontier_unseen(crawler.wh)
 
 
 def test_revisit_rounds_match_oracle(spark, rcorpus, rcfg, roracle,
@@ -214,23 +216,13 @@ def test_audit_clean_on_revisited_warehouse(spark, rwh):
     assert not any(r.violating for r in rows)
 
 
-def _assert_sched_and_text(crawler, oracle):
-    for rnd in range(1, TOTAL + 1):
-        got = [(r.url, r.host, r.depth, r.score)
-               for r in crawler.scheduled_df(rnd).collect()]
-        want = [(r["url"], r["host"], r["depth"], r["score"])
-                for r in oracle.scheduled[rnd - 1]]
-        assert got == want, f"round {rnd} ordering diverged"
-    assert _latest_texts(crawler.wh) == oracle.text
-
-
 def test_revisit_bloom_mode_matches_oracle(spark, rcorpus, rcfg, roracle,
                                            tmp_path):
-    """Bloom seen-set mode + revisit rounds: revisit candidates bypass
-    the probe entirely (seen by construction) and the shard upsert is
-    skipped, so scheduling and text must still match the oracle
-    (discovery rounds carry the usual bloom may-lose-never-invent
-    caveat; at this corpus size no FP fires)."""
+    """Bloom seen-set mode + revisit rounds: the round loop never
+    consults the shards (discovery rounds apply the exact seen set at
+    the frontier write; revisit candidates are seen by construction) and
+    revisit rounds skip the shard upsert, so the whole crawl — ordering,
+    text, seen, fetch_log, final frontier — matches the oracle exactly."""
     cfg = CrawlConfig(max_round_urls=200, use_bloom=True,
                       recrawl_min_interval_s=30.0,
                       recrawl_max_interval_s=150.0)
@@ -239,7 +231,7 @@ def test_revisit_bloom_mode_matches_oracle(spark, rcorpus, rcfg, roracle,
     pages, seeds, robots = corpus_dfs(spark, rcorpus)
     crawler.init_tables(pages, seeds, robots)
     crawler.run(ROUNDS, recrawl_rounds=RECRAWL)
-    _assert_sched_and_text(crawler, roracle)
+    assert_revisit_equivalent(crawler, roracle)
 
 
 def test_revisit_distributed_knobs_match_oracle(spark, rcorpus, rcfg,
