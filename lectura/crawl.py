@@ -3,8 +3,9 @@
 Each round is one batch DAG: frontier (already deduped and unseen) →
 robots (broadcast per-host rule arrays) → politeness budget → salted
 per-host rank → global deterministic top-k → as-of fetch join against the
-pages corpus → fused Arrow extraction → frontier(r+1) (exact anti-join
-against seen ∪ new_seen — the one place a round applies the seen set)/
+pages corpus → fused Arrow extraction → frontier(r+1) (the round's new
+children exact-anti-joined against seen ∪ new_seen — the one place a round
+applies the seen set; carried-over rows are unseen by invariant)/
 text/metrics/seen writes → atomic round commit. With use_bloom the bloom
 or cuckoo shards are maintained beside the exact set but not consulted by
 the round. The loop is driver-side Python (a crawl is iterative — each
@@ -516,13 +517,13 @@ class Crawler:
         else:
             # Candidate set: the frontier table is INVARIANTLY written
             # url-deduped and disjoint from `seen` (init_tables dedupes the
-            # seeds and writes an empty seen; next_frontier passes through
-            # dedupe_frontier and the exact anti-join against seen ∪
-            # new_seen before the append; resume restores committed
-            # snapshots only), so a per-round re-dedupe or seen filter
-            # would be a pure no-op over the whole frontier — and a
-            # bloom/cuckoo probe could only drop unseen urls on false
-            # positives. Skip both.
+            # seeds and writes an empty seen; next_frontier anti-joins its
+            # new children against seen ∪ new_seen, carries over only
+            # unscheduled allowed rows and passes through dedupe_frontier;
+            # resume restores committed snapshots only), so a per-round
+            # re-dedupe or seen filter would be a pure no-op over the whole
+            # frontier — and a bloom/cuckoo probe could only drop unseen
+            # urls on false positives. Skip both.
             # robots verdicts (broadcast per-host rule arrays, longest match
             # resolved per row)
             verdict = apply_robots(frontier.drop("for_round"),
@@ -598,23 +599,21 @@ class Crawler:
         # r1 #3 — an unconditional hint OOMs the driver at cluster scale).
         bc = (F.broadcast if n_scheduled <= cfg.broadcast_max_rows
               else (lambda df: df))
-        ok_log = (
-            extracted.join(bc(scheduled.select("url", "host")), "url")
+        # extracted ⊆ scheduled, both url-unique: one left join gives every
+        # scheduled url one row — ok with its sizes, or a miss (no capture,
+        # SEMANTICS.md §8) where the join found nothing.
+        fetch_log = (
+            scheduled.select("url", "host")
+            .join(bc(extracted.select("url", "bytes", "n_links")), "url",
+                  "left")
             .select(
                 F.lit(rnd).alias("round"), "host", "url",
-                F.lit("ok").alias("status"), F.col("bytes"), F.col("n_links"),
+                F.when(F.col("bytes").isNull(), F.lit("miss"))
+                .otherwise(F.lit("ok")).alias("status"),
+                F.coalesce("bytes", F.lit(0).cast("long")).alias("bytes"),
+                F.coalesce("n_links", F.lit(0)).alias("n_links"),
             )
         )
-        miss_log = (
-            scheduled.join(bc(extracted.select("url")), "url", "left_anti")
-            .select(
-                F.lit(rnd).alias("round"), "host", "url",
-                F.lit("miss").alias("status"),
-                F.lit(0).cast("long").alias("bytes"),
-                F.lit(0).alias("n_links"),
-            )
-        )
-        fetch_log = ok_log.unionByName(miss_log)
 
         # children: explode canonical outlinks, score via precomputed
         # depth-base literals (bit-identical floats vs the oracle)
@@ -637,40 +636,6 @@ class Crawler:
             )
             .drop("_parent_score")
         )
-        # Pre-reduce per RAW link before canonicalization: pages link the
-        # same targets repeatedly (nav/listing structure), so the best row
-        # per raw string — order (score desc, depth asc, src asc), encoded
-        # as a struct-min; discovered_ts is constant within a round — is a
-        # partial-aggregating groupBy that shrinks the canonicalize UDF's
-        # Arrow traffic and the dedupe window input by the repeat factor.
-        # Sound because same-raw ⇒ same-canonical and the kept row
-        # dominates the dropped ones under dedupe_frontier's global order
-        # (SEMANTICS.md §4); dedupe_frontier still merges across raw
-        # variants afterwards. Outlinks are already canonical (X1
-        # canonicalizes at resolve time), so with_url_parts only derives
-        # host/hrk/path_q — no second canonicalize pass through Python.
-        def reduce_children(src: DataFrame) -> DataFrame:
-            return with_url_parts(
-                src.groupBy("url")
-                .agg(
-                    F.min(
-                        F.struct(
-                            (-F.col("score")).alias("_ns"),
-                            F.col("depth").alias("depth"),
-                            F.col("src_url").alias("src_url"),
-                            F.col("score").alias("score"),
-                        )
-                    ).alias("_b")
-                )
-                .select(
-                    "url",
-                    F.col("_b.depth").alias("depth"),
-                    F.col("_b.score").alias("score"),
-                    F.col("_b.src_url").alias("src_url"),
-                )
-                .withColumn("discovered_ts", F.lit(round_ts))
-            )
-
         seen = wh.read("seen")
         if revisit:
             # Unscheduled-but-due revisits are NOT re-queued: due-ness is
@@ -685,47 +650,53 @@ class Crawler:
         else:
             leftovers = allowed.join(
                 bc(scheduled.select("url")), "url", "left_anti")
-            new_seen = (scheduled.select("url").unionByName(blocked)
-                        .distinct().cache())
-            # seen grows with the crawl: broadcast the anti-join side only
-            # while its footer-counted row bound stays under the gate, else
-            # shuffle (same scale rule as host_state).
+            # url-distinct as is: scheduled ⊆ allowed and blocked =
+            # ¬allowed, both drawn from the url-distinct frontier
+            new_seen = scheduled.select("url").unionByName(blocked).cache()
             seen_rows = wh.approx_rows("seen") + 2 * n_scheduled
             seen_all = seen.select("url").unionByName(new_seen)
-        if seen_rows <= cfg.broadcast_max_rows:
-            # Seen-filter EARLY, while it is a broadcast-hash anti-join:
-            # children link overwhelmingly to just-scheduled pages (nav
-            # structure), so filtering before the pre-reduce groupBy and
-            # the dedupe window kills most child rows in the scan stage —
-            # before either shuffle. Sound because an anti-join on url
-            # commutes with per-url best-row selection (dedupe_frontier)
-            # and with the same-url pre-reduce: dropping ALL rows of a
-            # seen url before or after picking its best row leaves the
-            # same survivor set (SEMANTICS.md §4). children_raw is
-            # filtered upstream of its groupBy so the partial agg and the
-            # parts-UDF see only surviving urls.
-            bseen = F.broadcast(seen_all)
-            children = reduce_children(
-                children_raw.join(bseen, "url", "left_anti")
+        # seen grows with the crawl: broadcast it only while its
+        # footer-counted row bound stays under the gate, else shuffle (same
+        # scale rule as host_state). The gate picks the join hint only.
+        bc_seen = (F.broadcast if seen_rows <= cfg.broadcast_max_rows
+                   else (lambda df: df))
+        # Only the children meet the seen set: leftovers are frontier rows
+        # (disjoint from seen by invariant), unscheduled and robots-allowed
+        # (so not blocked), hence never in seen_all. An anti-join on url
+        # commutes with dedupe_frontier's per-url pick (SEMANTICS §4, §10).
+        # Pre-reduce per url first: pages link the same targets repeatedly
+        # (nav/listing structure), so the struct-min best row per url (order
+        # score desc, depth asc, src asc; discovered_ts is constant within a
+        # round) is a partial-aggregating groupBy that shrinks everything
+        # downstream by the repeat factor. The anti-join then reuses the
+        # groupBy's url partitioning (a shuffled join exchanges only the seen
+        # side) and runs before the parts UDF, so Python sees only surviving
+        # urls. Outlinks are already canonical (X1 canonicalizes at resolve
+        # time), so with_url_parts only derives host/hrk/path_q.
+        children = with_url_parts(
+            children_raw.groupBy("url")
+            .agg(
+                F.min(
+                    F.struct(
+                        (-F.col("score")).alias("_ns"),
+                        F.col("depth").alias("depth"),
+                        F.col("src_url").alias("src_url"),
+                        F.col("score").alias("score"),
+                    )
+                ).alias("_b")
             )
-            next_frontier = dedupe_frontier(
-                leftovers.join(bseen, "url", "left_anti")
-                .select(*children.columns)
-                .unionByName(children)
-            ).withColumn("for_round", F.lit(rnd + 1))
-        else:
-            # seen outgrew the broadcast gate: a shuffled anti-join is
-            # cheapest AFTER dedupe (fewer, distinct rows through the
-            # join's exchange), so filter late and let AQE pick.
-            children = reduce_children(children_raw)
-            next_frontier = (
-                dedupe_frontier(
-                    leftovers.select(*children.columns)
-                    .unionByName(children)
-                )
-                .join(seen_all, "url", "left_anti")
-                .withColumn("for_round", F.lit(rnd + 1))
+            .select(
+                "url",
+                F.col("_b.depth").alias("depth"),
+                F.col("_b.score").alias("score"),
+                F.col("_b.src_url").alias("src_url"),
             )
+            .join(bc_seen(seen_all), "url", "left_anti")
+            .withColumn("discovered_ts", F.lit(round_ts))
+        )
+        next_frontier = dedupe_frontier(
+            leftovers.select(*children.columns).unionByName(children)
+        ).withColumn("for_round", F.lit(rnd + 1))
 
         # ---- writes (all appended, committed atomically via RoundLog) -----
         # Materialize the two shared caches with cheap actions first, then
@@ -856,10 +827,9 @@ class Crawler:
                 for tname in ("fetch_log", "metrics", "lineage"):
                     snaps[tname] = (self.wh.snapshot(tname)
                                     if self.wh.exists(tname) else None)
-                if os.environ.get("LECTURA_TRACE"):
-                    stats["trace"] = trace
-                    stats["sinks"] = sink_secs
-                self.log.commit(rnd, snaps, stats)
+                # a copy: the caller already holds (and may print) `stats`
+                self.log.commit(rnd, snaps,
+                                {**stats, "trace": trace, "sinks": sink_secs})
             except BaseException as e:  # surfaced at the next join point
                 self._pending_err.append(e)
             finally:

@@ -154,7 +154,6 @@ def _near_dup_pairs_fn(gated: DataFrame, near_dup: str, threshold: float,
 
 def _dedup_keep(slim: DataFrame, *, max_hamming: int,
                 band_max_df: int | None,
-                mark=lambda label: None,
                 pairs_fn=None):
     """Exact + near-dup winner selection over the SLIM (url,
     fingerprint, simhash) projection — the shared dedup core of the
@@ -189,7 +188,6 @@ def _dedup_keep(slim: DataFrame, *, max_hamming: int,
 
     n_hot, hot = 0, None
     if pairs_fn is not None:
-        mark("winners_hotcount")
         edges = pairs_fn(winners)
     else:
         sig = winners.select(F.col("_nid").alias("id"),
@@ -205,7 +203,6 @@ def _dedup_keep(slim: DataFrame, *, max_hamming: int,
                 .persist()
             )
             n_hot = hot.count()
-        mark("winners_hotcount")
         # dedupe=False: connected_components' canonical-edge distinct
         # absorbs multi-chunk agreements, so the pair stream skips its own
         # dropDuplicates shuffle.
@@ -222,7 +219,6 @@ def _dedup_keep(slim: DataFrame, *, max_hamming: int,
     ).localCheckpoint()
     if hot is not None:
         hot.unpersist()
-    mark("pairs_cc")
     labeled = (
         winners.join(F.broadcast(comp) if _small(comp) else comp,
                      winners["_nid"] == comp["node"], "left")
@@ -296,20 +292,6 @@ def export_corpus(wh: Warehouse, *, min_tokens: int = 20,
     scan-stage explode, doc metadata inherited per chunk, no join
     back) BEFORE shard packing, which then packs on the unique
     (url, chunk_id) key."""
-    import os as _os
-    import sys as _sys
-    import time as _time
-    _trace = bool(_os.environ.get("LECTURA_TRACE"))
-    _t0 = _time.time()
-
-    def _mark(label: str) -> None:
-        nonlocal _t0
-        if _trace:
-            now = _time.time()
-            print(f"EXPORT_TRACE {label}={now - _t0:.2f}s",
-                  file=_sys.stderr, flush=True)
-            _t0 = now
-
     text_snapshot = wh.snapshot("text")
     docs = latest_text(wh.read("text")).select(*EXPORT_COLS)
     gated = _gate(docs, min_tokens, min_quality, langs)
@@ -324,10 +306,8 @@ def export_corpus(wh: Warehouse, *, min_tokens: int = 20,
     slim = gated.select("url", "fingerprint", "simhash")
     keep, n_hot, dedup_cleanup = _dedup_keep(
         slim, max_hamming=max_hamming, band_max_df=band_max_df,
-        mark=_mark,
         pairs_fn=_near_dup_pairs_fn(gated, near_dup, near_dup_threshold,
                                     band_max_df))
-    _mark("comp_join_gate")
     out = gated.join(keep, "url").select(
         *EXPORT_COLS, "n_exact_copies", "cluster_size"
     )
@@ -397,11 +377,9 @@ def export_corpus(wh: Warehouse, *, min_tokens: int = 20,
         )
     else:
         snap = wh.overwrite(out_table, out.repartition(n_parts, "url"))
-    _mark("winner_join_write")
     for df_ in dedup_cleanup + cleanup:
         df_.unpersist()
     n_docs = wh.count_rows(wh._files(out_table))
-    _mark("post_stats")
     # Incremental-export handoff (S17 composition): persist the slim
     # gated projection (the dedup input — 40 B/doc, column-pruned scan,
     # no text bytes) plus a one-row meta record pinning the consumed
@@ -422,7 +400,6 @@ def export_corpus(wh: Warehouse, *, min_tokens: int = 20,
                 min_tokens=min_tokens, min_quality=min_quality,
                 langs=langs, max_hamming=max_hamming,
                 band_max_df=band_max_df)
-    _mark("state_meta")
     stats = {"table": out_table, "snapshot": snap, "n_docs": int(n_docs),
              "near_dup": near_dup, "n_hot_buckets_dropped": n_hot}
     if near_dup != "simhash":

@@ -1,20 +1,18 @@
 """Warehouse abstraction: Iceberg-style snapshot tables (SURVEY.md §0.1
 design consequence; B:14 "Iceberg tables … resumable from checkpoint").
 
-Two backends share one API:
+Each table is a directory of immutable parquet files plus numbered
+snapshot manifests (``snap-000042.json`` = full file list) and a ``HEAD``
+pointer updated with an atomic ``os.replace``. Appends never rewrite data
+files, commits are all-or-nothing, and any historical snapshot remains
+readable — the Iceberg semantics the crawl's checkpoint/resume (S9/ST8)
+needs.
 
-- ``iceberg`` (real cluster): ``spark.read.format("iceberg")`` /
-  ``df.writeTo(tbl).append()`` with snapshot-id time travel. Requires
-  ``--packages org.apache.iceberg:iceberg-spark-runtime-4.1_2.13:<ver>`` +
-  catalog confs at spark-submit time. NOT runnable in this sandbox (no jar,
-  no network — SURVEY.md §0.1), so it is declared, documented, and raises
-  if selected locally.
-- ``parquet-manifest`` (local, default): each table is a directory of
-  immutable parquet files plus numbered snapshot manifests
-  (``snap-000042.json`` = full file list) and a ``HEAD`` pointer updated
-  with an atomic ``os.replace``. Appends never rewrite data files, commits
-  are all-or-nothing, and any historical snapshot remains readable —
-  the Iceberg semantics the crawl's checkpoint/resume (S9/ST8) needs.
+A real Iceberg catalog is the parked cluster seam, not a second backend:
+it would serve this same API with ``spark.read.format("iceberg")`` /
+``df.writeTo(tbl).append()`` and snapshot-id time travel, given
+``iceberg-spark-runtime`` and catalog confs on the cluster (SURVEY.md
+§0.1).
 """
 
 from __future__ import annotations
@@ -28,15 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 
 class Warehouse:
-    def __init__(self, root: str, spark: SparkSession, backend: str = "parquet-manifest"):
-        if backend == "iceberg":
-            raise NotImplementedError(
-                "iceberg backend requires iceberg-spark-runtime on the cluster "
-                "classpath (absent in this sandbox — SURVEY.md §0.1); use "
-                "backend='parquet-manifest' locally"
-            )
-        if backend != "parquet-manifest":
-            raise ValueError(f"unknown backend {backend!r}")
+    def __init__(self, root: str, spark: SparkSession):
         self.root = root
         self.spark = spark
         os.makedirs(root, exist_ok=True)
@@ -282,7 +272,7 @@ class Warehouse:
           with no further shuffle and no window. This is the honest cost
           of diffing copy-on-write states; a merge-on-read Iceberg
           changelog would prune to touched data files first (documented
-          cluster seam, same as the backend switch in __init__).
+          cluster seam, see the module docstring).
 
         Duplicate keys inside either snapshot RAISE (same contract as
         ``merge`` — update pairing is undefined without key uniqueness);

@@ -217,9 +217,9 @@ def test_maintain_between_sessions_preserves_crawl(
 
     root = str(tmp_path / "whm")
     wh = Warehouse(root, spark)
-    # tiny sink_rows_per_file forces a multi-file fan-in per round (the
-    # config-derived sink fan-in otherwise writes ONE file at this round
-    # size — nothing left for compaction to shrink)
+    # tiny sink_rows_per_file forces a multi-file seen fan-in per round
+    # (the config-derived sink fan-in otherwise writes ONE file at this
+    # round size — nothing left for compaction to shrink)
     cfg = CrawlConfig(max_round_urls=cfg.max_round_urls,
                       sink_rows_per_file=50)
     crawler = Crawler(spark, wh, cfg)
@@ -227,11 +227,11 @@ def test_maintain_between_sessions_preserves_crawl(
     crawler.init_tables(pages, seeds, robots)
     crawler.run(2)
 
-    pre_log_files = len(wh._files("fetch_log"))
+    pre_seen_files = len(wh._files("seen"))
     pre_frontier_rows = wh.approx_rows("frontier")
     actions = maintain(wh, target_file_bytes=1 << 30)
     assert "frontier" in actions and "_round_log" in actions
-    assert len(wh._files("fetch_log")) < pre_log_files
+    assert len(wh._files("seen")) < pre_seen_files
     assert wh.approx_rows("frontier") < pre_frontier_rows  # spent rounds gone
     assert len(wh._files("host_state")) == 1
 

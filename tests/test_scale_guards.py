@@ -15,6 +15,7 @@ from lectura.oracle import run_oracle
 from lectura.seen import bloom_probe, shard_stats
 from lectura.tables import Warehouse
 from tests.conftest import corpus_dfs
+from tests.test_e2e import assert_frontier_unseen
 
 
 def _crawl(spark, corpus, cfg, root, rounds):
@@ -28,8 +29,10 @@ def _crawl(spark, corpus, cfg, root, rounds):
 
 def test_broadcast_gate_forced_off_matches_oracle(spark, corpus, cfg, tmp_path):
     """broadcast_max_rows=0 drops every size-gated broadcast hint (fetch
-    join, budget joins) — the shuffled-join fallback a cluster-scale round
-    takes must produce the identical crawl (VERDICT r1 #3 done-criterion)."""
+    join, budget joins, fetch_log join, frontier-write seen anti-join) —
+    the shuffled-join fallback a cluster-scale round takes must produce
+    the identical crawl (VERDICT r1 #3 done-criterion): ordering, text,
+    seen set and final frontier."""
     nobc = dataclasses.replace(cfg, broadcast_max_rows=0)
     rounds = 2
     crawler = _crawl(spark, corpus, nobc, str(tmp_path / "wh"), rounds)
@@ -42,6 +45,16 @@ def test_broadcast_gate_forced_off_matches_oracle(spark, corpus, cfg, tmp_path):
         assert got == want, f"round {rnd} diverged without broadcast hints"
     texts = {r.url: r.text for r in crawler.wh.read("text").collect()}
     assert texts == oracle.text
+    seen = {r.url for r in crawler.wh.read("seen").collect()}
+    assert seen == oracle.seen
+    final = sorted(
+        (r.url, r.depth, r.score)
+        for r in crawler.wh.read("frontier")
+        .filter(F.col("for_round") == rounds + 1).collect()
+    )
+    assert final == sorted((r["url"], r["depth"], r["score"])
+                           for r in oracle.frontier_final)
+    assert_frontier_unseen(crawler.wh)
 
 
 def test_asof_tie_yields_single_winner(spark, corpus, cfg, tmp_path):
