@@ -5,12 +5,13 @@ robots (broadcast per-host rule arrays) → politeness budget → salted
 per-host rank → global deterministic top-k → as-of fetch join against the
 pages corpus → fused Arrow extraction → frontier(r+1) (the round's new
 children exact-anti-joined against seen ∪ new_seen — the one place a round
-applies the seen set; carried-over rows are unseen by invariant)/
-text/metrics/seen writes → atomic round commit. With use_bloom the bloom
-or cuckoo shards are maintained beside the exact set but not consulted by
-the round. The loop is driver-side Python (a crawl is iterative — each
-round feeds the next, which one streaming query cannot express;
-SURVEY.md §2.8).
+applies the seen set; carried-over rows are unseen by invariant) →
+six sinks in one thread pool (frontier, seen, bloom shards, host_state,
+fetch_log → metrics, lineage) → atomic round commit, written before
+run_round returns. With use_bloom the bloom or cuckoo shards are
+maintained beside the exact set but not consulted by the round. The loop
+is driver-side Python (a crawl is iterative — each round feeds the next,
+which one streaming query cannot express; SURVEY.md §2.8).
 
 Run on a cluster (corpus layout: synth_spark.write_corpus):
     spark-submit --py-files lectura.zip crawl_submit.py \
@@ -23,6 +24,7 @@ import argparse
 import json
 import os
 import time
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -277,10 +279,6 @@ class Crawler:
         self.wh = wh
         self.cfg = cfg or CrawlConfig()
         self.log = RoundLog(wh.root)
-        # Deferred tail of the previous round (metrics-only sinks + the
-        # round commit) — see run_round's sink section.
-        self._pending: "threading.Thread | None" = None
-        self._pending_err: list[BaseException] = []
         # Robots-derived tables are static across rounds (rules are
         # written once at init): build + cache them on first use instead
         # of re-reading and re-aggregating the rules parquet every round.
@@ -293,15 +291,6 @@ class Crawler:
             self._rule_arrays = build_rule_arrays(rules).cache()
             self._host_delay = host_delay_table(rules).cache()
         return self._rule_arrays, self._host_delay
-
-    def _join_pending(self) -> None:
-        if self._pending is not None:
-            self._pending.join()
-            self._pending = None
-            if self._pending_err:
-                err = self._pending_err[0]
-                self._pending_err = []
-                raise RuntimeError("deferred sink/commit failed") from err
 
     # -- setup ---------------------------------------------------------------
     def init_tables(self, pages: DataFrame, seeds: DataFrame,
@@ -508,9 +497,8 @@ class Crawler:
             # frontier (which passes through untouched below). No seen
             # filter (every candidate is seen by construction) and no
             # robots pass (history contains only fetches that robots
-            # allowed, and rules are static within a crawl). The deferred
-            # laggard sinks include fetch_log — join them before reading.
-            self._join_pending()
+            # allowed, and rules are static within a crawl). Every earlier
+            # round committed its fetch_log before returning.
             verdict = None
             blocked = None
             allowed = self._revisit_candidates(rnd)
@@ -644,8 +632,7 @@ class Crawler:
             # with the newly-discovered children. Nothing new becomes
             # seen (every revisit is seen by construction).
             leftovers = frontier.drop("for_round")
-            new_seen = None
-            seen_rows = wh.approx_rows("seen")
+            new_seen, new_seen_rows = None, 0
             seen_all = seen.select("url")
         else:
             leftovers = allowed.join(
@@ -653,11 +640,15 @@ class Crawler:
             # url-distinct as is: scheduled ⊆ allowed and blocked =
             # ¬allowed, both drawn from the url-distinct frontier
             new_seen = scheduled.select("url").unionByName(blocked).cache()
-            seen_rows = wh.approx_rows("seen") + 2 * n_scheduled
+            # new_seen ⊆ this round's frontier, so that frontier's footer
+            # rows bound it without a Spark job (2 × n_scheduled does not:
+            # the round cap does not bound the blocked rows).
+            new_seen_rows = wh.approx_rows_where("frontier", "for_round", rnd)
             seen_all = seen.select("url").unionByName(new_seen)
         # seen grows with the crawl: broadcast it only while its
         # footer-counted row bound stays under the gate, else shuffle (same
         # scale rule as host_state). The gate picks the join hint only.
+        seen_rows = wh.approx_rows("seen") + new_seen_rows
         bc_seen = (F.broadcast if seen_rows <= cfg.broadcast_max_rows
                    else (lambda df: df))
         # Only the children meet the seen set: leftovers are frontier rows
@@ -698,13 +689,12 @@ class Crawler:
             leftovers.select(*children.columns).unionByName(children)
         ).withColumn("for_round", F.lit(rnd + 1))
 
-        # ---- writes (all appended, committed atomically via RoundLog) -----
-        # Materialize the two shared caches with cheap actions first, then
-        # fan the independent sink writes out over driver threads: Spark
-        # schedules the jobs concurrently, so the many small sinks
-        # (fetch_log, seen, host_state, lineage, metrics) cost one job
-        # latency instead of a serial sum — on a real cluster these are
-        # separate Iceberg commits and equally independent.
+        # ---- writes: six sinks in one pool, then the round commit ---------
+        # The sinks are independent appends, so they run on driver threads
+        # and Spark schedules their jobs concurrently: the many small sinks
+        # (fetch_log, seen, host_state, lineage, metrics) cost about one job
+        # latency, not a serial sum (on a cluster they would be separate
+        # Iceberg commits, equally independent).
         # extracted row count from parquet footers (no Spark job)
         n_extracted = wh.count_rows(wh.files_added("text", text_snap))
         mark("materialize")
@@ -732,7 +722,7 @@ class Crawler:
             wh.append(
                 "seen",
                 new_seen.select("url", F.lit(rnd).alias("round"))
-                .coalesce(cfg.sink_fan_in(2 * n_scheduled)),
+                .coalesce(cfg.sink_fan_in(new_seen_rows)),
             )
 
         def w_bloom():
@@ -770,22 +760,13 @@ class Crawler:
                 ).coalesce(1),
             )
 
-        # Sink split (latency, not correctness): the CRITICAL sinks feed
-        # round r+1's reads (frontier, seen, seen_shards, host_state) and
-        # are awaited here; the LAGGARD sinks (fetch_log → metrics,
-        # lineage) feed nothing downstream, so they and the round commit
-        # run on a deferred thread OVERLAPPED with round r+1's schedule/
-        # extract phases — per-round serial latency is the scaling tax at
-        # every parallelism level. Correctness: round r+1's own sink phase
-        # joins the deferred thread before touching any table (no
-        # concurrent same-table manifest commits); the commit's per-table
-        # snapshots are captured at this sync point and patched for the
-        # laggard tables after their writes, so a crash anywhere in the
-        # window restores exactly round r (kill/resume test).
-        critical = [w_frontier, w_seen, w_bloom, w_host_state]
-        laggard = [w_fetch_log, w_lineage]
-        from concurrent.futures import ThreadPoolExecutor
-
+        # run_round returns only after the round is committed: every sink
+        # has landed and the marker records each table's snapshot, so the
+        # next round (and any reader of the log) sees the whole round, and
+        # a crash anywhere before the marker restores exactly round r-1
+        # (kill/resume test). A failed sink or commit raises from round r.
+        sinks = [w_frontier, w_seen, w_bloom, w_host_state, w_fetch_log,
+                 w_lineage]
         sink_secs: dict[str, float] = {}
 
         def _run_sink(fn):
@@ -796,49 +777,27 @@ class Crawler:
             finally:
                 sink_secs[fn.__name__] = round(time.time() - t, 2)
 
-        self._join_pending()
-        pool = ThreadPoolExecutor(max_workers=len(critical) + len(laggard))
-        crit_futs = {pool.submit(_run_sink, fn): fn.__name__
-                     for fn in critical}
-        lag_futs = {pool.submit(_run_sink, fn): fn.__name__ for fn in laggard}
-        for fut, name in crit_futs.items():
-            try:
-                fut.result()
-            except Exception as e:
-                pool.shutdown(wait=True)
-                raise RuntimeError(f"sink {name} failed in round {rnd}") from e
+        with ThreadPoolExecutor(max_workers=len(sinks)) as pool:
+            futs = {fn.__name__: pool.submit(_run_sink, fn) for fn in sinks}
         mark("w_sinks")
-        snaps = self._snapshots()
+        if verdict is not None:
+            verdict.unpersist()
+        if new_seen is not None:
+            new_seen.unpersist()
+        for name, fut in futs.items():
+            if fut.exception() is not None:
+                raise RuntimeError(
+                    f"sink {name} failed in round {rnd}") from fut.exception()
         stats = {
             "round": rnd,
             "scheduled": int(n_scheduled),
             "extracted": int(n_extracted),
             "seconds": round(time.time() - t0, 3),
         }
-        if verdict is not None:
-            verdict.unpersist()
-        if new_seen is not None:
-            new_seen.unpersist()
-
-        def _finish():
-            try:
-                for fut, name in lag_futs.items():
-                    fut.result()
-                for tname in ("fetch_log", "metrics", "lineage"):
-                    snaps[tname] = (self.wh.snapshot(tname)
-                                    if self.wh.exists(tname) else None)
-                # a copy: the caller already holds (and may print) `stats`
-                self.log.commit(rnd, snaps,
-                                {**stats, "trace": trace, "sinks": sink_secs})
-            except BaseException as e:  # surfaced at the next join point
-                self._pending_err.append(e)
-            finally:
-                pool.shutdown(wait=False)
-
-        import threading
-
-        self._pending = threading.Thread(target=_finish, daemon=True)
-        self._pending.start()
+        # a copy: the caller gets (and the CLI prints) `stats` without the
+        # per-phase walls
+        self.log.commit(rnd, self._snapshots(),
+                        {**stats, "trace": trace, "sinks": sink_secs})
         return stats
 
     # -- loop -----------------------------------------------------------------
@@ -856,9 +815,6 @@ class Crawler:
         stats = []
         for rnd in range(start + 1, rounds + recrawl_rounds + 1):
             stats.append(self.run_round(rnd, revisit=rnd > rounds))
-        # the final round's deferred sinks + commit must land before the
-        # crawl is considered done (and before any reader trusts the log)
-        self._join_pending()
         return stats
 
     # -- convenience ------------------------------------------------------------

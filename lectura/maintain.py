@@ -293,14 +293,18 @@ def main(argv: list[str] | None = None) -> int:
     spark = get_spark(master=args.master, app_name="lectura-maintain")
     wh = Warehouse(args.warehouse, spark)
     if args.audit:
+        # streamed a partition at a time: the driver never holds one row
+        # per host
         rows = audit_politeness(
             wh, round_seconds=args.round_seconds,
             default_delay=args.default_delay,
-        ).orderBy(F.desc("violating"), "host").collect()
+        ).orderBy(F.desc("violating"), "host").toLocalIterator()
+        n_hosts = n_bad = 0
         for r in rows:
             print(json.dumps(r.asDict()))
-        n_bad = sum(1 for r in rows if r.violating)
-        print(json.dumps({"_summary": {"hosts_audited": len(rows),
+            n_hosts += 1
+            n_bad += bool(r.violating)
+        print(json.dumps({"_summary": {"hosts_audited": n_hosts,
                                        "violations": n_bad}}))
         return 1 if n_bad else 0
     actions = maintain(

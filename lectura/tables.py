@@ -146,6 +146,26 @@ class Warehouse:
         driver-side metadata read used to gate broadcast hints."""
         return self.count_rows(self._files(name))
 
+    def approx_rows_where(self, name: str, column: str, value) -> int:
+        """approx_rows over only the row groups whose footer min/max of
+        `column` admit `value` (a row group without statistics counts) —
+        still an upper bound on the rows with `column == value`, still
+        no Spark job."""
+        import pyarrow.parquet as pq
+
+        n = 0
+        for f in self._files(name):
+            md = pq.read_metadata(f)
+            for i in range(md.num_row_groups):
+                rg = md.row_group(i)
+                st = next((rg.column(j).statistics
+                           for j in range(rg.num_columns)
+                           if rg.column(j).path_in_schema == column), None)
+                if (st is None or not st.has_min_max
+                        or st.min <= value <= st.max):
+                    n += rg.num_rows
+        return n
+
     @staticmethod
     def count_rows(files: list[str]) -> int:
         """Row count from parquet footers — a driver-side metadata read,

@@ -2,7 +2,14 @@
 grouped by spark.job.description (set per phase/sink by lectura.crawl),
 and a census of Python vs JVM tasks per description — every task of a
 Python-executing stage pays a fixed worker round trip whatever its rows.
-Usage: python scripts/analyze_evlog.py <evlog-file-or-dir>"""
+
+Usage: python scripts/analyze_evlog.py <evlog-file-or-dir>
+
+A directory that is not itself a rolling log (``events_<n>_...`` files,
+Spark 4's ``eventlog_v2_<app>/`` layout) is an event-log directory: its
+newest entry, a plain log or a rolling one, is read. Only uncompressed
+logs are read; Spark 4 compresses by default, so write the log with
+``spark.eventLog.compress=false``."""
 
 from __future__ import annotations
 
@@ -10,6 +17,12 @@ import json
 import os
 import sys
 from collections import defaultdict
+
+sys.path.insert(0, os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "perfbench"))
+from evlog import read_events  # noqa: E402
+
+COMPRESSED = (".lz4", ".lzf", ".snappy", ".zstd")
 
 # Physical operators whose stages run rows through a PySpark worker; the
 # event log names them in each RDD's `Scope`.
@@ -31,46 +44,53 @@ def python_scopes(stage_info: dict) -> set[str]:
     return names
 
 
-def main() -> None:
-    path = sys.argv[1]
-    if os.path.isdir(path):
-        files = [os.path.join(path, f) for f in os.listdir(path)
-                 if not f.startswith(".")]
-        path = max(files, key=os.path.getmtime)
+def log_path(path: str) -> str:
+    """`path` itself, or the newest entry of an event-log directory."""
+    if os.path.isdir(path) and not any(f.startswith("events_")
+                                       for f in os.listdir(path)):
+        entries = [os.path.join(path, f) for f in os.listdir(path)
+                   if not f.startswith(".")]
+        path = max(entries, key=os.path.getmtime)
+    return path
+
+
+def main(argv: list[str] | None = None) -> None:
+    path = log_path((argv if argv is not None else sys.argv[1:])[0])
+    names = ([f for _d, _dirs, files in os.walk(path) for f in files]
+             if os.path.isdir(path) else [path])
+    if any(n.endswith(COMPRESSED) for n in names):
+        sys.exit(f"{path}: compressed event log; this script reads plain "
+                 "JSON lines only — rerun the job with "
+                 "--conf spark.eventLog.compress=false")
     jobs = {}
     stage_task_ms = defaultdict(float)
     stage_tasks = defaultdict(int)
     stage_names = {}
     stage_py = {}
     stage_to_job = {}
-    with open(path) as fh:
-        for line in fh:
-            try:
-                e = json.loads(line)
-            except json.JSONDecodeError:
-                continue
-            ev = e.get("Event")
-            if ev == "SparkListenerJobStart":
-                jid = e["Job ID"]
-                desc = (e.get("Properties") or {}).get(
-                    "spark.job.description", "?")
-                jobs[jid] = {"desc": desc, "t0": e["Submission Time"],
-                             "t1": None}
-                for sid in e.get("Stage IDs", []):
-                    stage_to_job[sid] = jid
-            elif ev == "SparkListenerJobEnd":
-                if e["Job ID"] in jobs:
-                    jobs[e["Job ID"]]["t1"] = e["Completion Time"]
-            elif ev == "SparkListenerTaskEnd":
-                sid = e["Stage ID"]
-                ti = e.get("Task Info", {})
-                stage_task_ms[sid] += (ti.get("Finish Time", 0)
-                                       - ti.get("Launch Time", 0))
-                stage_tasks[sid] += 1
-            elif ev == "SparkListenerStageCompleted":
-                si = e["Stage Info"]
-                stage_names[si["Stage ID"]] = si["Stage Name"].split("\n")[0]
-                stage_py[si["Stage ID"]] = python_scopes(si)
+    for e in read_events(path):
+        ev = e.get("Event")
+        if ev == "SparkListenerJobStart":
+            jid = e["Job ID"]
+            desc = (e.get("Properties") or {}).get(
+                "spark.job.description", "?")
+            jobs[jid] = {"desc": desc, "t0": e["Submission Time"],
+                         "t1": None}
+            for sid in e.get("Stage IDs", []):
+                stage_to_job[sid] = jid
+        elif ev == "SparkListenerJobEnd":
+            if e["Job ID"] in jobs:
+                jobs[e["Job ID"]]["t1"] = e["Completion Time"]
+        elif ev == "SparkListenerTaskEnd":
+            sid = e["Stage ID"]
+            ti = e.get("Task Info", {})
+            stage_task_ms[sid] += (ti.get("Finish Time", 0)
+                                   - ti.get("Launch Time", 0))
+            stage_tasks[sid] += 1
+        elif ev == "SparkListenerStageCompleted":
+            si = e["Stage Info"]
+            stage_names[si["Stage ID"]] = si["Stage Name"].split("\n")[0]
+            stage_py[si["Stage ID"]] = python_scopes(si)
 
     by_desc = defaultdict(lambda: [0.0, 0.0, 0])
     print(f"{'job':>4} {'wall_s':>8} {'task_s':>9}  description")

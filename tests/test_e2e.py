@@ -9,6 +9,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from lectura.checkpoint import RoundLog
 from lectura.config import CrawlConfig
 from lectura.crawl import Crawler
 from lectura.oracle import run_oracle
@@ -120,32 +121,57 @@ def test_oracle_matches_frozen_golden(oracle):
     assert g["text_sha256"] == got_hash
 
 
-def test_kill_resume_identical(spark, corpus, cfg, oracle, tmp_path):
-    """Run 2 rounds, simulate a crashed round 3 (uncommitted writes),
-    resume → state identical to the uninterrupted oracle run (ST8)."""
+@pytest.mark.parametrize("crash", ["garbage", "sink", "commit"])
+def test_kill_resume_identical(spark, corpus, cfg, oracle, tmp_path,
+                               monkeypatch, crash):
+    """Run 2 rounds, crash round 3, resume → state identical to the
+    uninterrupted oracle run (ST8). Crashes: `garbage` — a killed round
+    left uncommitted appends; `sink` — the round-3 fetch_log append
+    raises; `commit` — the round-3 marker write raises. A failed sink or
+    commit raises from run_round(3) itself and leaves round 2 committed."""
     root = str(tmp_path / "whr")
     wh = Warehouse(root, spark)
     crawler = Crawler(spark, wh, cfg)
     pages, seeds, robots = corpus_dfs(spark, corpus)
     crawler.init_tables(pages, seeds, robots)
     crawler.run(2)
-    # crash mid-round-3: garbage appended to tables but round never committed
-    garbage = spark.createDataFrame(
-        [("http://garbage.example/x", 99)], "url string, round int"
-    )
-    wh.append("seen", garbage)
-    wh.append(
-        "text",
-        spark.createDataFrame(
+    if crash == "garbage":
+        wh.append("seen", spark.createDataFrame(
+            [("http://garbage.example/x", 99)], "url string, round int"))
+        wh.append("text", spark.createDataFrame(
             [(99, "http://garbage.example/x", "JUNK")],
-            "round int, url string, text string",
-        ),
-    )
+            "round int, url string, text string"))
+    else:
+        with monkeypatch.context() as m:
+            if crash == "sink":
+                def append(name, df, real=wh.append):
+                    if name == "fetch_log":
+                        raise OSError("injected fetch_log append failure")
+                    return real(name, df)
+
+                m.setattr(wh, "append", append)
+                fails = pytest.raises(RuntimeError,
+                                      match="sink w_fetch_log failed in round 3")
+            else:
+                def commit(self, rnd, snapshots, stats=None,
+                           real=RoundLog.commit):
+                    if rnd == 3:
+                        raise OSError("injected commit failure")
+                    return real(self, rnd, snapshots, stats)
+
+                m.setattr(RoundLog, "commit", commit)
+                fails = pytest.raises(OSError, match="injected commit")
+            with fails:
+                crawler.run_round(3)
+        assert crawler.log.last_committed() == 2
     crawler2 = Crawler(spark, wh, cfg)
     crawler2.run(ROUNDS, resume=True)  # restores snapshots, reruns round 3
     assert_equivalent(crawler2, oracle)
     seen = {r.url for r in wh.read("seen").collect()}
     assert "http://garbage.example/x" not in seen
+    dup = (wh.read("fetch_log").groupBy("round", "url").count()
+           .filter(F.col("count") > 1))
+    assert dup.count() == 0, "resume duplicated fetch_log rows"
 
 
 def test_sitemap_seed_ingestion_matches_oracle(spark, corpus, cfg, oracle,
