@@ -2192,25 +2192,28 @@ def canonicalize_u1(spark, sf_dir):
     )
 
 
-# U3 host-reverse sort key (native expression form)
+# U3 host-reverse sort key: the crawl's own JVM expressions (url_parts)
 @q(
     "host_reverse_u3",
     """
     SELECT host,
-           array_to_string(list_reverse(string_split(host, '.')), ',') AS hrk
-    FROM (SELECT concat('www.host', c_custkey % 37, '.example.com') AS host
+           array_to_string(list_reverse(string_split(host, '.')), ',')
+             || ')/p' || CAST(c_custkey AS VARCHAR) AS hrk
+    FROM (SELECT concat('www.host', c_custkey % 37, '.example.com') AS host,
+                 c_custkey
           FROM customer)
     """,
 )
 def host_reverse_u3(spark, sf_dir):
+    from lectura.urlnorm import url_parts
+
     c = t(spark, sf_dir, "customer")
-    host = F.concat(
-        F.lit("www.host"), (F.col("c_custkey") % 37).cast("string"),
-        F.lit(".example.com"),
+    url = F.concat(
+        F.lit("http://www.host"), (F.col("c_custkey") % 37).cast("string"),
+        F.lit(".example.com/p"), F.col("c_custkey").cast("string"),
     )
-    return c.select(host.alias("host")).withColumn(
-        "hrk", F.concat_ws(",", F.reverse(F.split("host", r"\.")))
-    )
+    host, hrk, _ = url_parts(url)
+    return c.select(host, hrk)
 
 
 # U2 URL part extraction (parse_url native fn vs regex oracle)

@@ -661,9 +661,8 @@ class Crawler:
         # round) is a partial-aggregating groupBy that shrinks everything
         # downstream by the repeat factor. The anti-join then reuses the
         # groupBy's url partitioning (a shuffled join exchanges only the seen
-        # side) and runs before the parts UDF, so Python sees only surviving
-        # urls. Outlinks are already canonical (X1 canonicalizes at resolve
-        # time), so with_url_parts only derives host/hrk/path_q.
+        # side). Outlinks are already canonical (X1 canonicalizes at resolve
+        # time), so host/hrk/path_q are JVM string expressions on the url.
         children = with_url_parts(
             children_raw.groupBy("url")
             .agg(

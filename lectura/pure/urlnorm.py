@@ -1,9 +1,10 @@
 """RFC 3986 URL canonicalization + host-reverse sort key (SEMANTICS.md §1–2).
 
 Spec source: BASELINE.json north_star (B:6) — "URL canonicalization
-(RFC 3986 normalize + host-reverse sort key)". Pure functions; wrapped by
-vectorized pandas UDFs in lectura/urlnorm.py and called directly by the
-oracle crawler.
+(RFC 3986 normalize + host-reverse sort key)". Pure functions, called
+directly by the oracle crawler; lectura/urlnorm.py wraps canonicalize_url
+in a pandas UDF and derives the url parts as JVM expressions equal to
+registered_host / host_reverse_key / path_query_of.
 """
 
 from __future__ import annotations
@@ -141,6 +142,8 @@ def _canonicalize_uncached(url: str) -> str | None:
         return None
     if host.endswith("."):
         host = host[:-1]
+    if ":" in host:  # IPv6 literal: keep the brackets (RFC 3986 §3.2.2)
+        host = f"[{host}]"
     try:
         port = parts.port  # raises ValueError on non-numeric
     except ValueError:
@@ -188,8 +191,12 @@ def path_query_of(canon_url: str) -> str:
 
 
 def registered_host(canon_url: str) -> str:
-    """Hostname without port (robots + politeness are per hostname)."""
-    return host_of(canon_url).split(":", 1)[0]
+    """Hostname without port (robots + politeness are per hostname); an
+    IPv6 literal keeps its brackets."""
+    hp = host_of(canon_url)
+    if hp.startswith("["):
+        return hp[: hp.find("]") + 1]
+    return hp.split(":", 1)[0]
 
 
 def host_reverse_key(canon_url: str) -> str:

@@ -1,9 +1,11 @@
 """Spark-side URL operators (SURVEY.md §2.2, U1–U6).
 
-Canonicalization and the host-reverse key wrap the pure spec functions in
-Arrow-batched pandas UDFs (one fused pass returning a struct, so each URL
-crosses the JVM↔Python boundary once). Hash/bucket/salt keys are native
-JVM expressions (`xxhash64`, `pmod`) — no Python in those hot paths.
+Canonicalization is the one pandas UDF (`canonicalize_udf`, Arrow-batched):
+RFC 3986 normalization needs Python. Everything derived from a canonical
+url is a native JVM expression: host/hrk/path_q are string slicing
+(`url_parts`), and the hash/bucket/salt keys are `xxhash64`/`pmod`. The
+pure functions in lectura/pure/urlnorm.py stay the reference (the oracle
+calls them; tests/test_urlnorm.py checks the expressions against them).
 """
 
 from __future__ import annotations
@@ -13,82 +15,39 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from lectura.pure.urlnorm import (
-    canonicalize_url,
-    host_reverse_key,
-    path_query_of,
-    registered_host,
-)
-
-_URL_STRUCT = T.StructType(
-    [
-        T.StructField("url", T.StringType()),
-        T.StructField("host", T.StringType()),
-        T.StructField("hrk", T.StringType()),
-        T.StructField("path_q", T.StringType()),
-    ]
-)
-
-
-def _norm_tuple(u: str) -> tuple:
-    c = canonicalize_url(u)
-    if c is None:
-        return (None, None, None, None)
-    return (c, registered_host(c), host_reverse_key(c), path_query_of(c))
-
-
-@F.pandas_udf(_URL_STRUCT)
-def url_norm_struct(urls: pd.Series) -> pd.DataFrame:
-    """One Arrow pass: raw url -> (canonical url, host, host_reverse_key,
-    path?query). Nulls propagate for uncrawlable URLs. Each distinct URL in
-    the batch is normalized once (outlink batches repeat targets heavily)."""
-    memo = {u: _norm_tuple(u) for u in pd.unique(urls.dropna())}
-    none4 = (None, None, None, None)
-    tuples = [memo.get(u, none4) if u is not None else none4 for u in urls]
-    return pd.DataFrame(tuples, columns=["url", "host", "hrk", "path_q"],
-                        index=urls.index)
-
-
-_PARTS_STRUCT = T.StructType(
-    [
-        T.StructField("host", T.StringType()),
-        T.StructField("hrk", T.StringType()),
-        T.StructField("path_q", T.StringType()),
-    ]
-)
-
-
-@F.pandas_udf(_PARTS_STRUCT)
-def url_parts_struct(canon_urls: pd.Series) -> pd.DataFrame:
-    """host/hrk/path_q for ALREADY-CANONICAL urls (extracted outlinks are
-    canonicalized at resolve time — X1), skipping the idempotent
-    re-canonicalization pass that dominates url_norm_struct's cost."""
-
-    def parts(u: str) -> tuple:
-        return (registered_host(u), host_reverse_key(u), path_query_of(u))
-
-    memo = {u: parts(u) for u in pd.unique(canon_urls.dropna())}
-    none3 = (None, None, None)
-    tuples = [memo.get(u, none3) if u is not None else none3
-              for u in canon_urls]
-    return pd.DataFrame(tuples, columns=["host", "hrk", "path_q"],
-                        index=canon_urls.index)
-
-
-def with_url_parts(df: DataFrame, url_col: str = "url") -> DataFrame:
-    """Add host/hrk/path_q to rows whose `url_col` is already canonical
-    (same output as with_url_norm on canonical input, ~half the Python)."""
-    return (
-        df.withColumn("_p", url_parts_struct(F.col(url_col)))
-        .select("*", "_p.*")
-        .drop("_p")
-        .filter(F.col(url_col).isNotNull())
-    )
+from lectura.pure.urlnorm import canonicalize_url
 
 
 @F.pandas_udf(T.StringType())
 def canonicalize_udf(urls: pd.Series) -> pd.Series:
     return urls.map(canonicalize_url, na_action="ignore")
+
+
+# Pure, but declared nondeterministic so the optimizer cannot push a
+# caller's `url IS NOT NULL` filter below the projection, which evaluates
+# the UDF twice (two ArrowEvalPython passes over the same rows).
+canonicalize_udf = canonicalize_udf.asNondeterministic()
+
+
+def url_parts(url: Column | str) -> list[Column]:
+    """[host, hrk, path_q] of a CANONICAL url as JVM string expressions —
+    registered_host, host_reverse_key (U3) and path_query_of of the pure
+    spec. An IPv6 literal host keeps its brackets (SEMANTICS §1)."""
+    hostport = F.regexp_extract(url, r"^.*?://([^/?]*)", 1)
+    tail = F.regexp_extract(url, r"(?s)^.*?://[^/?]*(.*)$", 1)
+    host = F.regexp_extract(hostport, r"^(\[[^\]]*\]|[^:]*)", 1)
+    path_q = F.when(tail.startswith("/"), tail).otherwise(
+        F.concat(F.lit("/"), tail))
+    hrk = F.concat(F.array_join(F.reverse(F.split(host, r"\.", -1)), ","),
+                   F.lit(")"), path_q)
+    return [host.alias("host"), hrk.alias("hrk"), path_q.alias("path_q")]
+
+
+def with_url_parts(df: DataFrame, url_col: str = "url") -> DataFrame:
+    """Add host/hrk/path_q to rows whose `url_col` is already canonical,
+    dropping null urls."""
+    return (df.filter(F.col(url_col).isNotNull())
+            .select("*", *url_parts(url_col)))
 
 
 def url_key(url: Column | str) -> Column:
@@ -114,12 +73,8 @@ def salt(url: Column | str, buckets: int) -> Column:
 
 
 def with_url_norm(df: DataFrame, url_col: str = "url") -> DataFrame:
-    """Replace `url_col` with its canonical form and add host/hrk/path_q,
-    dropping uncrawlable rows."""
-    return (
-        df.withColumn("_n", url_norm_struct(F.col(url_col)))
-        .drop(url_col)
-        .select("*", "_n.*")
-        .drop("_n")
-        .filter(F.col("url").isNotNull())
-    )
+    """Replace `url_col` with its canonical form `url` (moved after the
+    other columns) and add host/hrk/path_q, dropping uncrawlable rows."""
+    others = [c for c in df.columns if c != url_col]
+    return with_url_parts(
+        df.select(*others, canonicalize_udf(F.col(url_col)).alias("url")))

@@ -2,6 +2,7 @@
 criterion), bloom/cuckoo-mode equivalence, golden pin, and kill/resume
 (ST8)."""
 
+import dataclasses
 import hashlib
 import json
 import os
@@ -121,14 +122,29 @@ def test_oracle_matches_frozen_golden(oracle):
     assert g["text_sha256"] == got_hash
 
 
-@pytest.mark.parametrize("crash", ["garbage", "sink", "commit"])
+# crash -> (Warehouse method that fails, its table, the sink running it,
+# the table that sink has already written when the failure hits)
+SINK_CRASHES = {
+    "sink": ("append", "fetch_log", "w_fetch_log", None),
+    "metrics": ("append", "metrics", "w_fetch_log", "fetch_log"),
+    "bloom_stats": ("append_local", "bloom_stats", "w_bloom", "seen_shards"),
+}
+
+
+@pytest.mark.parametrize(
+    "crash", ["garbage", "sink", "metrics", "bloom_stats", "commit"])
 def test_kill_resume_identical(spark, corpus, cfg, oracle, tmp_path,
                                monkeypatch, crash):
     """Run 2 rounds, crash round 3, resume → state identical to the
     uninterrupted oracle run (ST8). Crashes: `garbage` — a killed round
     left uncommitted appends; `sink` — the round-3 fetch_log append
-    raises; `commit` — the round-3 marker write raises. A failed sink or
-    commit raises from run_round(3) itself and leaves round 2 committed."""
+    raises; `metrics` — the metrics append raises after fetch_log has
+    landed; `bloom_stats` (bloom mode) — the bloom_stats append raises
+    after the seen_shards overwrite has landed; `commit` — the round-3
+    marker write raises. A failed sink or commit raises from run_round(3)
+    itself and leaves round 2 committed."""
+    if crash == "bloom_stats":
+        cfg = dataclasses.replace(cfg, use_bloom=True)
     root = str(tmp_path / "whr")
     wh = Warehouse(root, spark)
     crawler = Crawler(spark, wh, cfg)
@@ -142,16 +158,18 @@ def test_kill_resume_identical(spark, corpus, cfg, oracle, tmp_path,
             [(99, "http://garbage.example/x", "JUNK")],
             "round int, url string, text string"))
     else:
+        method, table, sink, landed = SINK_CRASHES.get(crash, (None,) * 4)
+        landed_snap = wh.snapshot(landed) if landed else None
         with monkeypatch.context() as m:
-            if crash == "sink":
-                def append(name, df, real=wh.append):
-                    if name == "fetch_log":
-                        raise OSError("injected fetch_log append failure")
-                    return real(name, df)
+            if method:
+                def fail_on(name, *args, real=getattr(wh, method)):
+                    if name == table:
+                        raise OSError(f"injected {table} append failure")
+                    return real(name, *args)
 
-                m.setattr(wh, "append", append)
-                fails = pytest.raises(RuntimeError,
-                                      match="sink w_fetch_log failed in round 3")
+                m.setattr(wh, method, fail_on)
+                fails = pytest.raises(
+                    RuntimeError, match=f"sink {sink} failed in round 3")
             else:
                 def commit(self, rnd, snapshots, stats=None,
                            real=RoundLog.commit):
@@ -164,6 +182,8 @@ def test_kill_resume_identical(spark, corpus, cfg, oracle, tmp_path,
             with fails:
                 crawler.run_round(3)
         assert crawler.log.last_committed() == 2
+        if landed:
+            assert wh.snapshot(landed) > landed_snap, landed
     crawler2 = Crawler(spark, wh, cfg)
     crawler2.run(ROUNDS, resume=True)  # restores snapshots, reruns round 3
     assert_equivalent(crawler2, oracle)

@@ -35,6 +35,9 @@ VECTORS = [
     ("http://example.com/café", "http://example.com/caf%C3%A9"),
     ("  http://example.com/x  ", "http://example.com/x"),
     ("http://example.com/%zz", "http://example.com/%zz"),  # invalid escape kept
+    # IPv6 literals keep their brackets (RFC 3986 §3.2.2)
+    ("http://[2001:DB8::7]:8080/x", "http://[2001:db8::7]:8080/x"),
+    ("http://[::1]:80/", "http://[::1]/"),
 ]
 
 REJECTS = ["", None, "ftp://x.com/", "mailto:a@b", "javascript:void(0)",
@@ -97,20 +100,59 @@ def test_host_parts():
     assert path_query_of(u) == "/a/b?q=1"
     assert host_reverse_key(u) == "com,example,www)/a/b?q=1"
     assert host_reverse_key("http://example.com/") == "com,example)/"
+    v6 = "http://[2001:db8::7]:8080/x?y"
+    assert registered_host(v6) == "[2001:db8::7]"
+    assert host_reverse_key(v6) == "[2001:db8::7])/x?y"
 
 
 _URL_CHARS = string.ascii_letters + string.digits + ":/?#[]@!$&'()*+,;=-._~% "
+_IPV6_HOSTS = st.ip_addresses(v=6).flatmap(
+    lambda a: st.sampled_from([f"[{a}]", f"[{a.exploded.upper()}]"]))
 
 
 @settings(max_examples=300, deadline=None)
 @given(
-    host=st.from_regex(r"[a-zA-Z0-9.\-]{1,20}", fullmatch=True),
+    host=st.one_of(st.from_regex(r"[a-zA-Z0-9.\-]{1,20}", fullmatch=True),
+                   _IPV6_HOSTS),
     path=st.text(alphabet=_URL_CHARS, max_size=40),
 )
 def test_idempotent(host, path):
     u = canonicalize_url(f"http://{host}/{path}")
     if u is not None:
         assert canonicalize_url(u) == u, (host, path, u)
+
+
+_RAW_URLS = st.builds(
+    "{}://{}{}{}{}".format,
+    st.sampled_from(["http", "HTTPS"]),
+    st.one_of(
+        st.from_regex(r"[a-zA-Z0-9\-]{1,8}(\.[a-zA-Z0-9\-]{1,8}){0,3}\.?",
+                      fullmatch=True),
+        _IPV6_HOSTS,
+    ),
+    st.sampled_from(["", ":80", ":443", ":8080"]),
+    st.sampled_from(["/", "?", ""]),
+    st.text(alphabet=_URL_CHARS, max_size=20),
+)
+
+
+@settings(max_examples=25, deadline=None)
+@given(st.lists(_RAW_URLS, min_size=1, max_size=20))
+def test_jvm_url_parts_equal_pure(spark, raws):
+    """lectura.urlnorm.url_parts (JVM expressions the crawl runs) equals
+    the pure registered_host / host_reverse_key / path_query_of on
+    canonical urls: ports, trailing dots, IPv6 literals, uppercase and
+    `?` before any `/`."""
+    from lectura.urlnorm import url_parts
+
+    canon = [u for u in map(canonicalize_url, raws) if u is not None]
+    if not canon:
+        return
+    got = (spark.createDataFrame([(u,) for u in canon], "url string")
+           .select("url", *url_parts("url")).collect())
+    assert [(r.url, r.host, r.hrk, r.path_q) for r in got] == [
+        (u, registered_host(u), host_reverse_key(u), path_query_of(u))
+        for u in canon]
 
 
 @settings(max_examples=200, deadline=None)
