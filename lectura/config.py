@@ -31,8 +31,8 @@ class CrawlConfig:
     use_bloom: bool = False
     # Approximate seen-set backend when use_bloom is on: "bloom"
     # (bloomcore; ~14.4 bits/key at fpp 1e-3) or "cuckoo" (cuckoocore;
-    # ~32 bits/key, FPP ~1.2e-4, supports delete). Both shard the same
-    # way and share the probe/upsert plumbing (lectura/seen.py).
+    # ~32 bits/key, FPP ~1.2e-4, supports delete). Both run the same
+    # Spark path and differ only in kernel (lectura/seen.py).
     seen_filter: str = "bloom"
     # Broadcast-hint ceiling for round-sized sets (scheduled urls, as-of
     # winners, host_state): below this row count the small side is
@@ -76,6 +76,13 @@ class CrawlConfig:
     # task, so the rank switches to the SEL2 range-partition prefix
     # discipline (sampling.prefix_rank — same answer, >1 task).
     distributed_rank_min: int = 200_000
+
+    def __post_init__(self):
+        from lectura.seen import FILTERS
+
+        if self.seen_filter not in FILTERS:
+            raise ValueError(f"seen_filter {self.seen_filter!r} is not one "
+                             f"of {FILTERS}")
 
     def sink_fan_in(self, n_rows: int) -> int:
         """Sink write fan-in derived from the round's row count."""

@@ -2326,17 +2326,17 @@ def _seen_capacity(n: int, n_shards: int = 16) -> int:
     """,
 )
 def bloom_seen_d1(spark, sf_dir):
-    from lectura.seen import bloom_build, bloom_probe
+    from lectura.seen import shard_probe, shard_upsert
 
     inserted = _order_urls(spark, sf_dir, "o")
-    shards = bloom_build(inserted, 16,
-                         _seen_capacity(inserted.count()), 1e-3)
-    hits = bloom_probe(inserted, shards, 16).agg(
+    shards = shard_upsert(None, inserted, 16,
+                          _seen_capacity(inserted.count()), 1e-3)
+    hits = shard_probe(inserted, shards, 16).agg(
         F.count("*").alias("n_probed"),
         F.sum((~F.col("maybe_seen")).cast("long"))
         .alias("n_false_negatives"),
     )
-    novel_fp = bloom_probe(_order_urls(spark, sf_dir, "novel"), shards,
+    novel_fp = shard_probe(_order_urls(spark, sf_dir, "novel"), shards,
                            16).agg(
         (F.sum(F.col("maybe_seen").cast("long"))
          <= F.lit(1.5e-3) * F.count("*")).alias("fpp_ok")
@@ -2370,25 +2370,26 @@ def cuckoo_seen_d1c(spark, sf_dir):
     ~2^-16-per-slot-pair fingerprint FPP (bound set at 1e-3). Capacity
     sizes from the actual count (_seen_capacity) so the bounds hold at
     any sf."""
-    from lectura.seen import cuckoo_build, cuckoo_delete, cuckoo_probe
+    from lectura.seen import cuckoo_delete, shard_probe, shard_upsert
 
     urls = _order_urls(spark, sf_dir, "o").cache()
-    shards = cuckoo_build(urls, 16, _seen_capacity(urls.count()))
+    shards = shard_upsert(None, urls, 16, _seen_capacity(urls.count()),
+                          kind="cuckoo")
     victims = urls.orderBy("url").limit(100).cache()
     after_delete = cuckoo_delete(shards, victims, 16)
     survivors = urls.join(victims, "url", "left_anti")
-    surv = cuckoo_probe(survivors, after_delete, 16).agg(
+    surv = shard_probe(survivors, after_delete, 16, "cuckoo").agg(
         F.count("*").alias("n_survivors"),
         F.sum((~F.col("maybe_seen")).cast("long"))
         .alias("n_false_negatives"),
     )
-    dele = cuckoo_probe(victims, after_delete, 16).agg(
+    dele = shard_probe(victims, after_delete, 16, "cuckoo").agg(
         F.count("*").alias("n_deleted"),
         (F.sum(F.col("maybe_seen").cast("long")) <= F.lit(5))
         .alias("deleted_cleared_ok"),
     )
-    novel = cuckoo_probe(_order_urls(spark, sf_dir, "novel"),
-                         after_delete, 16).agg(
+    novel = shard_probe(_order_urls(spark, sf_dir, "novel"),
+                        after_delete, 16, "cuckoo").agg(
         (F.sum(F.col("maybe_seen").cast("long"))
          <= F.lit(1.5e-3) * F.count("*")).alias("fpp_ok")
     )

@@ -37,8 +37,7 @@ from lectura.frontier import (dedupe_frontier, rank_per_host, recrawl_due,
 from lectura.metrics import fetch_metrics, partition_lineage
 from lectura.robots import (apply_robots, build_rule_arrays,
                             build_rule_table, host_delay_table)
-from lectura.seen import (bloom_build, bloom_upsert, cuckoo_build,
-                          cuckoo_upsert)
+from lectura.seen import FILTERS, fpp_est, shard_upsert
 from lectura.tables import Warehouse
 from lectura.urlnorm import (host_bucket, url_host_bucket, with_url_norm,
                              with_url_parts)
@@ -60,91 +59,50 @@ BLOOM_STATS_SCHEMA = T.StructType([
 
 def commit_bloom(wh: Warehouse, spark: SparkSession, cfg, rnd: int,
                  seen: DataFrame, new_seen: DataFrame) -> list:
-    """Build this round's seen-filter shards (bloom or cuckoo per
-    cfg.seen_filter), merge into `seen_shards`, record per-shard health
-    in `bloom_stats`, and resize on saturation.
+    """Insert this round's urls into the seen-filter shards (`seen_shards`,
+    bloom or cuckoo per cfg.seen_filter), record per-shard health in
+    `bloom_stats`, and resize on saturation.
 
     Saturation guard (VERDICT r1 #4): sizing is fixed at build time;
     once cumulative inserts exceed it the configured FPP bound (B:6) no
     longer holds (bloom: FPP degrades silently; cuckoo: inserts start
     landing in the overflow stash). On saturation the filter is rebuilt
     from the exact seen set (always maintained alongside it) at ≥2× the
-    observed load. The stats scan is n_shards rows. Returns the
-    collected stats rows."""
-    is_cuckoo = cfg.seen_filter == "cuckoo"
-    cap = max(1024, cfg.seen_capacity // cfg.n_shards)
-    if wh.exists("seen_shards"):
-        merged = (
-            cuckoo_upsert(wh.read("seen_shards"), new_seen, cfg.n_shards,
-                          cap)
-            if is_cuckoo else
-            bloom_upsert(wh.read("seen_shards"), new_seen, cfg.n_shards,
-                         cap, cfg.fpp)
-        )
-        wh.overwrite("seen_shards", merged)
-    else:
-        built = (
-            cuckoo_build(new_seen.select("url"), cfg.n_shards, cap)
-            if is_cuckoo else
-            bloom_build(new_seen.select("url"), cfg.n_shards, cap, cfg.fpp)
-        )
-        wh.overwrite("seen_shards", built)
-    # Stats: ZERO extra jobs — the written shard files already carry the
-    # counters, so read everything but the bits column driver-side with
-    # pyarrow (n_shards slim rows), evaluate the FPP formula in Python
-    # (same (1-e^{-kn/m})^k as seen.shard_stats), and commit the rows as a
-    # driver-written parquet append. The former stats job + read-back was
-    # per-round serial latency.
-    import math
-
-    import pyarrow.parquet as pq
-
-    stats = []
-    for f in wh._files("seen_shards"):
-        t = pq.read_table(
-            f, columns=["shard_id", "n_inserted", "m_bits", "k", "capacity"]
-        )
-        for r in t.to_pylist():
-            n, m, k = (float(r["n_inserted"]), float(r["m_bits"]),
-                       float(r["k"]))
-            if is_cuckoo:
-                # m := bucket count, k := slots (seen.py column
-                # reinterpretation); probe compares 2k slots at `load`
-                # occupancy of 16-bit fingerprints
-                load = min(1.0, n / max(1.0, m * k))
-                fpp_est = 1.0 - (1.0 - 1.0 / 65535.0) ** (2 * k * load)
-            else:
-                fpp_est = (1.0 - math.exp(-k * n / m)) ** k
-            stats.append(
-                {
-                    "round": rnd,
-                    "shard_id": r["shard_id"],
-                    "n_inserted": r["n_inserted"],
-                    "capacity": r["capacity"],
-                    "fpp_est": fpp_est,
-                    "saturated": r["n_inserted"] > r["capacity"],
-                }
-            )
+    observed load. Returns the collected stats rows."""
     import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
 
+    cap = max(1024, cfg.seen_capacity // cfg.n_shards)
+    old = wh.read("seen_shards") if wh.exists("seen_shards") else None
+    wh.overwrite("seen_shards",
+                 shard_upsert(old, new_seen, cfg.n_shards, cap, cfg.fpp,
+                              cfg.seen_filter))
+    # Stats without a Spark job: the written shard files carry the
+    # counters, so read everything but the bits column driver-side
+    # (n_shards slim rows) and append them as a driver-written parquet.
+    cols = ["shard_id", "n_inserted", "m_bits", "k", "capacity"]
+    stats = [
+        {"round": rnd, "shard_id": r["shard_id"],
+         "n_inserted": r["n_inserted"], "capacity": r["capacity"],
+         "fpp_est": fpp_est(cfg.seen_filter, r["n_inserted"], r["m_bits"],
+                            r["k"]),
+         "saturated": r["n_inserted"] > r["capacity"]}
+        for f in wh._files("seen_shards")
+        for r in pq.read_table(f, columns=cols).to_pylist()
+    ]
     wh.append_local(
         "bloom_stats",
-        pa.Table.from_pylist(stats, schema=pa.schema(
-            [("round", pa.int32()), ("shard_id", pa.int32()),
-             ("n_inserted", pa.int64()), ("capacity", pa.int64()),
-             ("fpp_est", pa.float64()), ("saturated", pa.bool_())]
-        )),
+        pa.Table.from_pylist(stats,
+                             schema=to_arrow_schema(BLOOM_STATS_SCHEMA)),
         BLOOM_STATS_SCHEMA.json(),
     )
     if any(r["saturated"] for r in stats):
         new_cap = 2 * max(max(r["n_inserted"] for r in stats), cap)
         all_seen = seen.select("url").unionByName(new_seen.select("url"))
-        rebuilt = (
-            cuckoo_build(all_seen, cfg.n_shards, new_cap)
-            if is_cuckoo else
-            bloom_build(all_seen, cfg.n_shards, new_cap, cfg.fpp)
-        )
-        wh.overwrite("seen_shards", rebuilt)
+        wh.overwrite("seen_shards",
+                     shard_upsert(None, all_seen, cfg.n_shards, new_cap,
+                                  cfg.fpp, cfg.seen_filter))
     return stats
 
 
@@ -638,8 +596,12 @@ class Crawler:
             leftovers = allowed.join(
                 bc(scheduled.select("url")), "url", "left_anti")
             # url-distinct as is: scheduled ⊆ allowed and blocked =
-            # ¬allowed, both drawn from the url-distinct frontier
-            new_seen = scheduled.select("url").unionByName(blocked).cache()
+            # ¬allowed, both drawn from the url-distinct frontier. Not
+            # cached: a re-read of ≤ the round cap plus a filter of the
+            # cached verdict, so its readers (the frontier anti-join,
+            # w_seen, w_bloom) rebuild it inline instead of racing to run
+            # one cache-materialization job.
+            new_seen = scheduled.select("url").unionByName(blocked)
             # new_seen ⊆ this round's frontier, so that frontier's footer
             # rows bound it without a Spark job (2 × n_scheduled does not:
             # the round cap does not bound the blocked rows).
@@ -781,8 +743,6 @@ class Crawler:
         mark("w_sinks")
         if verdict is not None:
             verdict.unpersist()
-        if new_seen is not None:
-            new_seen.unpersist()
         for name, fut in futs.items():
             if fut.exception() is not None:
                 raise RuntimeError(
@@ -846,8 +806,7 @@ def main(argv: list[str] | None = None) -> None:
     ap.add_argument("--seen-capacity", type=int,
                     default=CrawlConfig.seen_capacity)
     ap.add_argument("--use-bloom", action="store_true")
-    ap.add_argument("--seen-filter", default="bloom",
-                    choices=["bloom", "cuckoo"],
+    ap.add_argument("--seen-filter", default="bloom", choices=FILTERS,
                     help="approximate seen-set backend (with --use-bloom)")
     ap.add_argument("--recrawl-rounds", type=int, default=0,
                     help="revisit rounds appended after the discovery "

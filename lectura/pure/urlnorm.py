@@ -134,16 +134,24 @@ def _canonicalize_uncached(url: str) -> str | None:
     if scheme not in ("http", "https"):
         return None
     host = (parts.hostname or "").lower()
+    hostinfo = parts.netloc.rpartition("@")[2]
+    if hostinfo.startswith("["):
+        # IP literal (IPv6 or IPvFuture, RFC 3986 §3.2.2): keep the
+        # brackets; only ":port" may follow the "]" (urlsplit would drop
+        # any other trailing text)
+        if hostinfo[hostinfo.find("]") + 1:][:1] not in ("", ":"):
+            return None
+        host = f"[{host}]"
+    elif "[" in hostinfo:  # text before "[": no such authority
+        return None
     # Reject hosts with empty DNS labels (leading ".", any ".."): not
     # resolvable reg-names — checked BEFORE the trailing-root-dot strip so
     # the strip stays idempotent (hypothesis-found: "http://../" and
     # "http://0../" both produced forms that re-canonicalized differently)
-    if not host or host.startswith(".") or ".." in host:
+    elif not host or host.startswith(".") or ".." in host:
         return None
-    if host.endswith("."):
+    elif host.endswith("."):
         host = host[:-1]
-    if ":" in host:  # IPv6 literal: keep the brackets (RFC 3986 §3.2.2)
-        host = f"[{host}]"
     try:
         port = parts.port  # raises ValueError on non-numeric
     except ValueError:

@@ -276,13 +276,8 @@ def run_seen(n: int, root: str, backend: str = "bloom") -> dict:
     os.environ.setdefault("PYSPARK_SUBMIT_ARGS", JVM)
     from pyspark.sql import functions as F
 
-    from lectura.seen import (bloom_build, bloom_probe, cuckoo_build,
-                              cuckoo_probe)
+    from lectura.seen import shard_probe, shard_upsert
     from lectura.session import get_spark
-
-    build = bloom_build if backend == "bloom" else (
-        lambda u, s, c, _fpp: cuckoo_build(u, s, c))
-    probe = bloom_probe if backend == "bloom" else cuckoo_probe
 
     n_shards = 64
     cap = int(n / n_shards / 0.8)  # ~0.8 load factor
@@ -300,7 +295,7 @@ def run_seen(n: int, root: str, backend: str = "bloom") -> dict:
 
     seen_urls = urls_of(spark.range(n))
     t0 = time.time()
-    shards = build(seen_urls, n_shards, cap, fpp)
+    shards = shard_upsert(None, seen_urls, n_shards, cap, fpp, backend)
     shards.write.mode("overwrite").parquet(os.path.join(root, "shards"))
     build_s = time.time() - t0
 
@@ -314,7 +309,7 @@ def run_seen(n: int, root: str, backend: str = "bloom") -> dict:
     cand = spark.read.parquet(os.path.join(root, "probe_in"))
     sh = spark.read.parquet(os.path.join(root, "shards"))
     t1 = time.time()
-    probed = probe(cand, sh, n_shards)
+    probed = shard_probe(cand, sh, n_shards, backend)
     agg = (probed.groupBy("planted")
            .agg(F.count(F.lit(1)).alias("n"),
                 F.sum(F.col("maybe_seen").cast("long")).alias("hits"))

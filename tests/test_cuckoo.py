@@ -158,15 +158,15 @@ def test_spark_build_probe_delete(spark):
     False, deletes clear membership — the operation bloom cannot do."""
     from pyspark.sql import functions as F
 
-    from lectura.seen import cuckoo_build, cuckoo_delete, cuckoo_probe
+    from lectura.seen import cuckoo_delete, shard_probe, shard_upsert
 
     urls = spark.range(5000).select(
         F.concat(F.lit("http://h"), (F.col("id") % 59).cast("string"),
                  F.lit(".example/p/"), F.col("id").cast("string"))
         .alias("url")
     )
-    shards = cuckoo_build(urls, 8, 10_000).cache()
-    probed = cuckoo_probe(urls, shards, 8)
+    shards = shard_upsert(None, urls, 8, 10_000, kind="cuckoo").cache()
+    probed = shard_probe(urls, shards, 8, "cuckoo")
     assert probed.filter(~F.col("maybe_seen")).count() == 0
 
     held_out = spark.range(5000, 10_000).select(
@@ -174,15 +174,16 @@ def test_spark_build_probe_delete(spark):
                  F.lit(".example/p/"), F.col("id").cast("string"))
         .alias("url")
     )
-    fp = cuckoo_probe(held_out, shards, 8).filter(F.col("maybe_seen")).count()
+    fp = (shard_probe(held_out, shards, 8, "cuckoo")
+          .filter(F.col("maybe_seen")).count())
     assert fp <= 10  # ~1e-4 of 5000
 
     victims = urls.limit(500)
     shards2 = cuckoo_delete(shards, victims, 8)
-    again = cuckoo_probe(victims, shards2, 8)
+    again = shard_probe(victims, shards2, 8, "cuckoo")
     assert again.filter(F.col("maybe_seen")).count() <= 5
     survivors = urls.subtract(victims)
-    assert (cuckoo_probe(survivors, shards2, 8)
+    assert (shard_probe(survivors, shards2, 8, "cuckoo")
             .filter(~F.col("maybe_seen")).count() == 0)
 
 
@@ -190,7 +191,7 @@ def test_spark_upsert_matches_build(spark):
     """Incremental upserts over 3 batches == membership of one-shot build."""
     from pyspark.sql import functions as F
 
-    from lectura.seen import cuckoo_probe, cuckoo_upsert
+    from lectura.seen import shard_probe, shard_upsert
 
     def batch(lo, hi):
         return spark.range(lo, hi).select(
@@ -200,15 +201,12 @@ def test_spark_upsert_matches_build(spark):
         )
 
     shards = None
-    empty = spark.createDataFrame(
-        [], "shard_id int, bits binary, n_inserted long, m_bits long, "
-            "k int, capacity long")
     for lo, hi in [(0, 1000), (1000, 2500), (2500, 4000)]:
-        shards = cuckoo_upsert(shards if shards is not None else empty,
-                               batch(lo, hi), 8, 10_000).cache()
+        shards = shard_upsert(shards, batch(lo, hi), 8, 10_000,
+                              kind="cuckoo").cache()
         shards.count()
     allu = batch(0, 4000)
-    assert (cuckoo_probe(allu, shards, 8)
+    assert (shard_probe(allu, shards, 8, "cuckoo")
             .filter(~F.col("maybe_seen")).count() == 0)
 
 

@@ -128,11 +128,18 @@ SINK_CRASHES = {
     "sink": ("append", "fetch_log", "w_fetch_log", None),
     "metrics": ("append", "metrics", "w_fetch_log", "fetch_log"),
     "bloom_stats": ("append_local", "bloom_stats", "w_bloom", "seen_shards"),
+    "seen_shards": ("overwrite", "seen_shards", "w_bloom", None),
+    "seen": ("append", "seen", "w_seen", None),
+    "host_state": ("append", "host_state", "w_host_state", None),
+    "frontier": ("append", "frontier", "w_frontier", None),
+    "lineage": ("append", "lineage", "w_lineage", None),
 }
+# crashes inside w_bloom, which runs only in bloom mode
+BLOOM_CRASHES = {"bloom_stats", "seen_shards"}
 
 
 @pytest.mark.parametrize(
-    "crash", ["garbage", "sink", "metrics", "bloom_stats", "commit"])
+    "crash", ["garbage", *SINK_CRASHES, "commit"])
 def test_kill_resume_identical(spark, corpus, cfg, oracle, tmp_path,
                                monkeypatch, crash):
     """Run 2 rounds, crash round 3, resume → state identical to the
@@ -140,10 +147,12 @@ def test_kill_resume_identical(spark, corpus, cfg, oracle, tmp_path,
     left uncommitted appends; `sink` — the round-3 fetch_log append
     raises; `metrics` — the metrics append raises after fetch_log has
     landed; `bloom_stats` (bloom mode) — the bloom_stats append raises
-    after the seen_shards overwrite has landed; `commit` — the round-3
-    marker write raises. A failed sink or commit raises from run_round(3)
-    itself and leaves round 2 committed."""
-    if crash == "bloom_stats":
+    after the seen_shards overwrite has landed; `seen_shards` (bloom
+    mode), `seen`, `host_state`, `frontier`, `lineage` — that sink's
+    first write raises; `commit` — the round-3 marker write raises. A
+    failed sink or commit raises from run_round(3) itself and leaves
+    round 2 committed."""
+    if crash in BLOOM_CRASHES:
         cfg = dataclasses.replace(cfg, use_bloom=True)
     root = str(tmp_path / "whr")
     wh = Warehouse(root, spark)
@@ -164,7 +173,7 @@ def test_kill_resume_identical(spark, corpus, cfg, oracle, tmp_path,
             if method:
                 def fail_on(name, *args, real=getattr(wh, method)):
                     if name == table:
-                        raise OSError(f"injected {table} append failure")
+                        raise OSError(f"injected {table} {method} failure")
                     return real(name, *args)
 
                 m.setattr(wh, method, fail_on)

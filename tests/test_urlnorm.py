@@ -38,6 +38,11 @@ VECTORS = [
     # IPv6 literals keep their brackets (RFC 3986 §3.2.2)
     ("http://[2001:DB8::7]:8080/x", "http://[2001:db8::7]:8080/x"),
     ("http://[::1]:80/", "http://[::1]/"),
+    # an IPvFuture literal stays a literal; no text may sit beside the
+    # brackets except ":port"
+    ("http://[v1.fe]/", "http://[v1.fe]/"),
+    ("http://a[::1]/", None),
+    ("http://[::1]x/", None),
 ]
 
 REJECTS = ["", None, "ftp://x.com/", "mailto:a@b", "javascript:void(0)",
@@ -108,12 +113,15 @@ def test_host_parts():
 _URL_CHARS = string.ascii_letters + string.digits + ":/?#[]@!$&'()*+,;=-._~% "
 _IPV6_HOSTS = st.ip_addresses(v=6).flatmap(
     lambda a: st.sampled_from([f"[{a}]", f"[{a.exploded.upper()}]"]))
+# IPvFuture (RFC 3986 §3.2.2): "v" 1*HEXDIG "." 1*(unreserved / ...)
+_IPVFUTURE_HOSTS = st.from_regex(r"\[v[0-9a-f]{1,2}\.[a-z0-9.\-]{1,8}\]",
+                                 fullmatch=True)
 
 
 @settings(max_examples=300, deadline=None)
 @given(
     host=st.one_of(st.from_regex(r"[a-zA-Z0-9.\-]{1,20}", fullmatch=True),
-                   _IPV6_HOSTS),
+                   _IPV6_HOSTS, _IPVFUTURE_HOSTS),
     path=st.text(alphabet=_URL_CHARS, max_size=40),
 )
 def test_idempotent(host, path):
@@ -129,6 +137,7 @@ _RAW_URLS = st.builds(
         st.from_regex(r"[a-zA-Z0-9\-]{1,8}(\.[a-zA-Z0-9\-]{1,8}){0,3}\.?",
                       fullmatch=True),
         _IPV6_HOSTS,
+        _IPVFUTURE_HOSTS,
     ),
     st.sampled_from(["", ":80", ":443", ":8080"]),
     st.sampled_from(["/", "?", ""]),
@@ -141,8 +150,8 @@ _RAW_URLS = st.builds(
 def test_jvm_url_parts_equal_pure(spark, raws):
     """lectura.urlnorm.url_parts (JVM expressions the crawl runs) equals
     the pure registered_host / host_reverse_key / path_query_of on
-    canonical urls: ports, trailing dots, IPv6 literals, uppercase and
-    `?` before any `/`."""
+    canonical urls: ports, trailing dots, IPv6 and IPvFuture literals,
+    uppercase and `?` before any `/`."""
     from lectura.urlnorm import url_parts
 
     canon = [u for u in map(canonicalize_url, raws) if u is not None]
