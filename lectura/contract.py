@@ -4098,7 +4098,7 @@ def recrawl_sched(spark, sf_dir):
 # C2b — the crawl-loop face of recrawl scheduling (SEMANTICS.md §16):
 # lag-derived change flags over per-(url, round) fingerprints, the
 # unrounded Poisson estimator, and the due filter — exactly the revisit
-# candidate computation `Crawler._revisit_candidates` runs, on a
+# candidate computation `Crawler._candidates` runs in a revisit round, on a
 # deterministic events-derived history. Output overdue rounded to 6 only
 # for the value hash (min/max/int-sum inputs make the division
 # bit-identical across engines; the crawl path keeps it unrounded).

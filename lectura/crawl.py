@@ -25,8 +25,11 @@ import json
 import os
 import time
 from concurrent.futures import ThreadPoolExecutor
+from contextlib import contextmanager
+from functools import partial
+from typing import NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from lectura.config import CrawlConfig
@@ -57,8 +60,27 @@ BLOOM_STATS_SCHEMA = T.StructType([
 ])
 
 
-def commit_bloom(wh: Warehouse, spark: SparkSession, cfg, rnd: int,
-                 seen: DataFrame, new_seen: DataFrame) -> list:
+class Candidates(NamedTuple):
+    frontier: DataFrame        # the round's frontier rows
+    allowed: DataFrame         # the rows scheduling ranks
+    verdict: DataFrame | None  # cached robots verdict (None: revisit round)
+
+
+class Schedule(NamedTuple):
+    scheduled: DataFrame       # the written schedule, re-read
+    n: int                     # its rows, from parquet footers
+    buckets: set[int]          # its host_buckets: the pages prune set
+
+
+class NextFrontier(NamedTuple):
+    frontier: DataFrame        # frontier(r+1) as w_frontier appends it
+    seen: DataFrame            # the committed seen set
+    new_seen: DataFrame | None  # urls the round makes seen (None: revisit)
+    new_seen_rows: int         # footer bound on new_seen's rows
+
+
+def commit_bloom(wh: Warehouse, cfg, rnd: int, seen: DataFrame,
+                 new_seen: DataFrame) -> list:
     """Insert this round's urls into the seen-filter shards (`seen_shards`,
     bloom or cuckoo per cfg.seen_filter), record per-shard health in
     `bloom_stats`, and resize on saturation.
@@ -106,6 +128,22 @@ def commit_bloom(wh: Warehouse, spark: SparkSession, cfg, rnd: int,
     return stats
 
 
+def broadcast_gate(rows: int, cfg: CrawlConfig):
+    """The join hint for a side of at most `rows` rows: F.broadcast while
+    `rows` ≤ cfg.broadcast_max_rows, else none (shuffle; AQE decides)."""
+    # An unconditional hint OOMs the driver on a 10^7-row cluster-scale
+    # round (VERDICT r1 #3).
+    return F.broadcast if rows <= cfg.broadcast_max_rows else (lambda df: df)
+
+
+@contextmanager
+def _phase(trace: list, label: str):
+    """Append (label, wall seconds of the with-block) to `trace`."""
+    t = time.time()
+    yield
+    trace.append((label, round(time.time() - t, 2)))
+
+
 def extract_fan_out(n_rows: int, parallelism: int, shuffle_parts: int,
                     batch_rows: int) -> int:
     """Round-robin partition count for the fetch+extract stage, derived
@@ -130,10 +168,8 @@ def asof_fetch(pages: DataFrame, scheduled: DataFrame, round_ts, cfg,
     html never enters an Exchange — at corpus scale the html shuffle, not
     the join, is the bottleneck. `pages` arrives host_bucket-pruned.
 
-    Broadcast-hint gate (CrawlConfig.broadcast_max_rows): the scheduled /
-    winner sets are all ≤ n_scheduled rows; hint only when that is provably
-    small, else let the join shuffle and AQE pick the strategy — an
-    unconditional hint OOMs the driver on a 10^7-row cluster-scale round.
+    Broadcast-hint gate (broadcast_gate): the scheduled / winner sets are
+    all ≤ n_scheduled rows, so they are hinted only when that is small.
 
     Capture identity: two captures of a url may legally share warc_ts;
     without a unique tiebreak in both the window ORDER BY and the join-back
@@ -143,8 +179,7 @@ def asof_fetch(pages: DataFrame, scheduled: DataFrame, round_ts, cfg,
     snapshot, and make the pick deterministic: the tied capture latest in
     file order wins (matches the pure oracle's caps[-1] under its
     sorted-file read order — SEMANTICS.md §6)."""
-    bc = (F.broadcast if n_scheduled <= cfg.broadcast_max_rows
-          else (lambda df: df))
+    bc = broadcast_gate(n_scheduled, cfg)
     cap_cols = [
         F.col("_metadata.file_path").alias("_cap_f"),
         F.col("_metadata.row_index").alias("_cap_i"),
@@ -242,6 +277,10 @@ class Crawler:
         # of re-reading and re-aggregating the rules parquet every round.
         self._rule_arrays: DataFrame | None = None
         self._host_delay: DataFrame | None = None
+        # Spark's count of generated classes compiled in this JVM (cache
+        # misses only; in local mode it covers the executors too)
+        self._compiles = (spark._jvm.org.apache.spark.metrics.source
+                          .CodegenMetrics.METRIC_COMPILATION_TIME())
 
     def _robots_tables(self) -> tuple[DataFrame, DataFrame]:
         if self._rule_arrays is None:
@@ -410,148 +449,134 @@ class Crawler:
             snaps[t] = self.wh.snapshot(t) if self.wh.exists(t) else None
         return snaps
 
-    # -- one round -------------------------------------------------------------
-    def _revisit_candidates(self, rnd: int) -> DataFrame:
-        """C2 wired into the crawl loop (SEMANTICS.md §16): frontier-shaped
-        candidates for a REVISIT round, computed from the warehouse's own
-        fetch history instead of the frontier table. depth is 0 by
-        definition (a revisit is a root-like fetch)."""
-        due = revisit_due(self.wh.read("fetch_log"), self.wh.read("text"),
-                          self.cfg, rnd)
-        return with_url_parts(
-            due.select("url", F.lit(0).alias("depth"),
-                       F.col("overdue").alias("score"))
-        )
-
-    def run_round(self, rnd: int, revisit: bool = False) -> dict:
-        cfg, wh, spark = self.cfg, self.wh, self.spark
-        round_ts = cfg.round_ts(rnd)
-        t0 = time.time()
-        trace: list[tuple[str, float]] = []
-        _last = [time.time()]
-
-        def mark(label: str) -> None:
-            now = time.time()
-            trace.append((label, round(now - _last[0], 2)))
-            _last[0] = now
-
-        spark.sparkContext.setJobDescription(f"r{rnd}:schedule")
-        frontier = wh.read("frontier").filter(F.col("for_round") == rnd)
-        rule_arrays, host_delay = self._robots_tables()
-        # host_state is stored as (host, last_round) deltas appended per
-        # round (no full-table rewrite); the current state is the max-merge
-        # over the delta chain. Footer row count (driver metadata read, no
-        # job) upper-bounds its size for the broadcast-hint gate.
-        host_state = (
-            wh.read("host_state")
-            .groupBy("host")
-            .agg(F.max("last_round").alias("last_round"))
-        )
-        hs_small = wh.approx_rows("host_state") <= cfg.broadcast_max_rows
-
+    # -- one round: phases ---------------------------------------------------
+    def _candidates(self, rnd: int, revisit: bool) -> Candidates:
+        frontier = self.wh.read("frontier").filter(F.col("for_round") == rnd)
         if revisit:
             # Revisit round (SEMANTICS.md §16): candidates come from the
             # recrawl-due estimator over committed fetch history, NOT the
-            # frontier (which passes through untouched below). No seen
-            # filter (every candidate is seen by construction) and no
-            # robots pass (history contains only fetches that robots
-            # allowed, and rules are static within a crawl). Every earlier
-            # round committed its fetch_log before returning.
-            verdict = None
-            blocked = None
-            allowed = self._revisit_candidates(rnd)
-        else:
-            # Candidate set: the frontier table is INVARIANTLY written
-            # url-deduped and disjoint from `seen` (init_tables dedupes the
-            # seeds and writes an empty seen; next_frontier anti-joins its
-            # new children against seen ∪ new_seen, carries over only
-            # unscheduled allowed rows and passes through dedupe_frontier;
-            # resume restores committed snapshots only), so a per-round
-            # re-dedupe or seen filter would be a pure no-op over the whole
-            # frontier — and a bloom/cuckoo probe could only drop unseen
-            # urls on false positives. Skip both.
-            # robots verdicts (broadcast per-host rule arrays, longest match
-            # resolved per row)
-            verdict = apply_robots(frontier.drop("for_round"),
-                                   rule_arrays=rule_arrays).cache()
-            allowed = verdict.filter(F.col("allowed")).drop("allowed")
-            blocked = verdict.filter(~F.col("allowed")).select("url")
+            # frontier (which passes through untouched). No seen filter
+            # (every candidate is seen by construction) and no robots pass
+            # (history contains only fetches that robots allowed, and rules
+            # are static within a crawl). Every earlier round committed its
+            # fetch_log before returning. depth is 0 by definition (a
+            # revisit is a root-like fetch).
+            due = revisit_due(self.wh.read("fetch_log"), self.wh.read("text"),
+                              self.cfg, rnd)
+            return Candidates(frontier, with_url_parts(due.select(
+                "url", F.lit(0).alias("depth"),
+                F.col("overdue").alias("score"))), None)
+        # The frontier table is INVARIANTLY written url-deduped and disjoint
+        # from `seen` (init_tables dedupes the seeds and writes an empty
+        # seen; _next_frontier anti-joins its new children against seen ∪
+        # new_seen, carries over only unscheduled allowed rows and passes
+        # through dedupe_frontier; resume restores committed snapshots
+        # only), so a per-round re-dedupe or seen filter would be a pure
+        # no-op over the whole frontier — and a bloom/cuckoo probe could
+        # only drop unseen urls on false positives. Skip both. Robots
+        # verdicts: broadcast per-host rule arrays, longest match resolved
+        # per row.
+        rule_arrays, _ = self._robots_tables()
+        verdict = apply_robots(frontier.drop("for_round"),
+                               rule_arrays=rule_arrays).cache()
+        return Candidates(frontier,
+                          verdict.filter(F.col("allowed")).drop("allowed"),
+                          verdict)
 
-        # politeness + ranking + global deterministic cap
-        budgeted = with_budget(allowed, host_delay, host_state,
-                               cfg, rnd, broadcast_hint=hs_small)
+    def _schedule_frame(self, rnd: int, allowed: DataFrame,
+                        obs: Observation) -> DataFrame:
+        """The round's schedule as the `scheduled` append writes it:
+        politeness budget, salted per-host rank, global deterministic cap.
+        `obs` collects the schedule's host_buckets on the same job."""
+        cfg, wh = self.cfg, self.wh
+        _, host_delay = self._robots_tables()
+        # host_state's footer row count (no job) upper-bounds its size
+        budgeted = with_budget(
+            allowed, host_delay, self._host_state(), cfg, rnd,
+            hint=broadcast_gate(wh.approx_rows("host_state"), cfg))
         ranked = rank_per_host(budgeted, cfg.salt_buckets,
                                max_rank=cfg.max_per_host)
-        # Materialize the schedule AS the scheduled-table append (S6-style):
-        # one job instead of cache-materialize + a later sink write, and no
-        # columnar cache. n_scheduled comes from parquet footers; the
-        # host_bucket prune set rides the SAME write job as an Observation
-        # (collect_set over ≤ cfg.host_buckets values) — zero extra Spark
-        # jobs and O(#buckets), not O(round-size), driver traffic (VERDICT
-        # r2: the previous pyarrow full-column read was ~80 MB/round at
-        # 10^7-URL cluster rounds). Downstream consumers re-read the
-        # written parquet column-pruned.
-        from pyspark.sql import Observation
-
-        sched_obs = Observation(f"r{rnd}-sched-buckets")
-        sched_snap = wh.append(
-            "scheduled",
+        return (
             schedule(ranked, cfg).select(
                 "sched_rank", "url", "host", "hrk", "path_q", "depth", "score"
             ).withColumn("round", F.lit(rnd))
             .withColumn("host_bucket", host_bucket("host", cfg.host_buckets))
-            .observe(sched_obs,
-                     F.collect_set("host_bucket").alias("buckets"))
+            .observe(obs, F.collect_set("host_bucket").alias("buckets"))
             # fan-in derived from the cap (the row-count bound known
             # before the write) — a no-op when the plan already has
             # fewer partitions (the small-cap TakeOrdered path)
-            .coalesce(cfg.sink_fan_in(cfg.max_round_urls)),
+            .coalesce(cfg.sink_fan_in(cfg.max_round_urls))
         )
-        sched_files = wh.files_added("scheduled", sched_snap)
-        n_scheduled = wh.count_rows(sched_files)
-        buckets: set[int] = set(sched_obs.get["buckets"])
-        scheduled = (
-            wh.read("scheduled").filter(F.col("round") == rnd)
-            .drop("round", "host_bucket")
-        )
-        mark("schedule")
 
-        pages = wh.read("pages")
-        if n_scheduled and "host_bucket" in pages.columns:
-            pages = pages.filter(F.col("host_bucket").isin(sorted(buckets)))
+    def _schedule(self, rnd: int, allowed: DataFrame) -> Schedule:
+        # Materialize the schedule AS the scheduled-table append (S6-style):
+        # one job instead of cache-materialize + a later sink write, and no
+        # columnar cache. n comes from parquet footers; the host_bucket
+        # prune set rides the SAME write job as an Observation (collect_set
+        # over ≤ cfg.host_buckets values) — zero extra Spark jobs and
+        # O(#buckets), not O(round-size), driver traffic (VERDICT r2).
+        # Downstream consumers re-read the written parquet column-pruned.
+        obs = Observation(f"r{rnd}-sched-buckets")
+        snap = self.wh.append("scheduled",
+                              self._schedule_frame(rnd, allowed, obs))
+        n = self.wh.count_rows(self.wh.files_added("scheduled", snap))
+        return Schedule(self._written("scheduled", rnd), n,
+                        set(obs.get["buckets"]))
+
+    def _host_state(self) -> DataFrame:
+        # host_state is stored as (host, last_round) deltas appended per
+        # round (no full-table rewrite); the current state is the max-merge
+        # over the delta chain.
+        return (self.wh.read("host_state").groupBy("host")
+                .agg(F.max("last_round").alias("last_round")))
+
+    def _written(self, table: str, rnd: int) -> DataFrame:
+        # round `rnd`'s rows of a per-round append table, re-read
+        # (column-pruned parquet, round pruned by row-group stats)
+        return (self.wh.read(table).filter(F.col("round") == rnd)
+                .drop("round", "host_bucket"))
+
+    def _text_frame(self, rnd: int, sched: Schedule) -> DataFrame:
+        """The round's as-of fetch + extraction as `text` appends it."""
+        spark, cfg = self.spark, self.cfg
+        pages = self.wh.read("pages")
+        if sched.n and "host_bucket" in pages.columns:
+            pages = pages.filter(F.col("host_bucket").isin(sorted(sched.buckets)))
         n_extract_parts = extract_fan_out(
-            n_scheduled, spark.sparkContext.defaultParallelism,
+            sched.n, spark.sparkContext.defaultParallelism,
             int(spark.conf.get("spark.sql.shuffle.partitions")),
             int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")),
         )
-        extract_df = fetch_extract(
-            asof_fetch(pages, scheduled, round_ts, cfg, n_scheduled,
-                       n_extract_parts),
-            html_gzip=cfg.html_gzip,
-        )
-        # Materialize the extraction ONCE as the text sink itself (S7) and
-        # re-read it (column-pruned parquet, round pruned by row-group
-        # stats) for every downstream consumer — text+links never sit in a
-        # columnar memory cache (MB-scale strings there mean GC churn that
-        # stalls all 32 cores), and the written table doubles as the
-        # round's resume artifact (ST8).
-        spark.sparkContext.setJobDescription(f"r{rnd}:extract-write")
-        text_snap = wh.append("text", extract_df.withColumn("round", F.lit(rnd)))
-        spark.sparkContext.setJobDescription(f"r{rnd}:counts")
-        extracted = wh.read("text").filter(F.col("round") == rnd).drop("round")
+        fetched = asof_fetch(pages, sched.scheduled, cfg.round_ts(rnd), cfg,
+                             sched.n, n_extract_parts)
+        return fetch_extract(fetched, html_gzip=cfg.html_gzip).withColumn(
+            "round", F.lit(rnd))
 
-        # Round-cap-sized sets (scheduled / extracted ≤ n_scheduled rows):
-        # broadcast only when provably small, else shuffle + AQE (VERDICT
-        # r1 #3 — an unconditional hint OOMs the driver at cluster scale).
-        bc = (F.broadcast if n_scheduled <= cfg.broadcast_max_rows
-              else (lambda df: df))
-        # extracted ⊆ scheduled, both url-unique: one left join gives every
-        # scheduled url one row — ok with its sizes, or a miss (no capture,
-        # SEMANTICS.md §8) where the join found nothing.
-        fetch_log = (
-            scheduled.select("url", "host")
-            .join(bc(extracted.select("url", "bytes", "n_links")), "url",
-                  "left")
+    def _materialize(self, rnd: int, sched: Schedule) -> tuple[DataFrame, int]:
+        # Materialize the extraction ONCE as the text sink itself (S7) and
+        # re-read it for every downstream consumer — text+links never sit in
+        # a columnar memory cache (MB-scale strings there mean GC churn that
+        # stalls all 32 cores), and the written table doubles as the round's
+        # resume artifact (ST8). Returns the re-read rows and their footer
+        # count.
+        sc, wh = self.spark.sparkContext, self.wh
+        text = self._text_frame(rnd, sched)
+        sc.setJobDescription(f"r{rnd}:extract-write")
+        snap = wh.append("text", text)
+        sc.setJobDescription(f"r{rnd}:counts")
+        return (self._written("text", rnd),
+                wh.count_rows(wh.files_added("text", snap)))
+
+    def _fetch_log_frame(self, rnd: int, sched: Schedule,
+                         extracted: DataFrame) -> DataFrame:
+        # fetch_log rows as w_fetch_log appends them. extracted ⊆
+        # scheduled, both url-unique: one left join gives every scheduled url
+        # one row — ok with its sizes, or a miss (no capture, SEMANTICS.md
+        # §8) where the join found nothing.
+        bc = broadcast_gate(sched.n, self.cfg)
+        return (
+            sched.scheduled.select("url", "host")
+            .join(bc(extracted.select("url", "bytes", "n_links")), "url", "left")
             .select(
                 F.lit(rnd).alias("round"), "host", "url",
                 F.when(F.col("bytes").isNull(), F.lit("miss"))
@@ -559,13 +584,19 @@ class Crawler:
                 F.coalesce("bytes", F.lit(0).cast("long")).alias("bytes"),
                 F.coalesce("n_links", F.lit(0)).alias("n_links"),
             )
+            .coalesce(self.cfg.sink_fan_in(sched.n))
         )
 
-        # children: explode canonical outlinks, score via precomputed
-        # depth-base literals (bit-identical floats vs the oracle)
-        base = cfg.depth_base()
+    def _children(self, extracted: DataFrame) -> DataFrame:
+        # The round's outlinks, one best (url, depth, score, src_url) row
+        # per url. Scores come from precomputed depth-base literals
+        # (bit-identical floats vs the oracle). Pages link the same targets
+        # repeatedly (nav/listing structure), so the struct-min best row per
+        # url (order score desc, depth asc, src asc) is a partial-aggregating
+        # groupBy that shrinks everything downstream by the repeat factor.
+        cfg = self.cfg
         base_map = F.create_map(
-            *[F.lit(x) for kv in base.items() for x in kv]
+            *[F.lit(x) for kv in cfg.depth_base().items() for x in kv]
         )
         children_raw = (
             extracted.filter(F.col("depth") + 1 <= cfg.max_depth)
@@ -582,50 +613,7 @@ class Crawler:
             )
             .drop("_parent_score")
         )
-        seen = wh.read("seen")
-        if revisit:
-            # Unscheduled-but-due revisits are NOT re-queued: due-ness is
-            # recomputed fresh from history next revisit round, so the
-            # pending frontier passes through untouched and merges only
-            # with the newly-discovered children. Nothing new becomes
-            # seen (every revisit is seen by construction).
-            leftovers = frontier.drop("for_round")
-            new_seen, new_seen_rows = None, 0
-            seen_all = seen.select("url")
-        else:
-            leftovers = allowed.join(
-                bc(scheduled.select("url")), "url", "left_anti")
-            # url-distinct as is: scheduled ⊆ allowed and blocked =
-            # ¬allowed, both drawn from the url-distinct frontier. Not
-            # cached: a re-read of ≤ the round cap plus a filter of the
-            # cached verdict, so its readers (the frontier anti-join,
-            # w_seen, w_bloom) rebuild it inline instead of racing to run
-            # one cache-materialization job.
-            new_seen = scheduled.select("url").unionByName(blocked)
-            # new_seen ⊆ this round's frontier, so that frontier's footer
-            # rows bound it without a Spark job (2 × n_scheduled does not:
-            # the round cap does not bound the blocked rows).
-            new_seen_rows = wh.approx_rows_where("frontier", "for_round", rnd)
-            seen_all = seen.select("url").unionByName(new_seen)
-        # seen grows with the crawl: broadcast it only while its
-        # footer-counted row bound stays under the gate, else shuffle (same
-        # scale rule as host_state). The gate picks the join hint only.
-        seen_rows = wh.approx_rows("seen") + new_seen_rows
-        bc_seen = (F.broadcast if seen_rows <= cfg.broadcast_max_rows
-                   else (lambda df: df))
-        # Only the children meet the seen set: leftovers are frontier rows
-        # (disjoint from seen by invariant), unscheduled and robots-allowed
-        # (so not blocked), hence never in seen_all. An anti-join on url
-        # commutes with dedupe_frontier's per-url pick (SEMANTICS §4, §10).
-        # Pre-reduce per url first: pages link the same targets repeatedly
-        # (nav/listing structure), so the struct-min best row per url (order
-        # score desc, depth asc, src asc; discovered_ts is constant within a
-        # round) is a partial-aggregating groupBy that shrinks everything
-        # downstream by the repeat factor. The anti-join then reuses the
-        # groupBy's url partitioning (a shuffled join exchanges only the seen
-        # side). Outlinks are already canonical (X1 canonicalizes at resolve
-        # time), so host/hrk/path_q are JVM string expressions on the url.
-        children = with_url_parts(
+        return (
             children_raw.groupBy("url")
             .agg(
                 F.min(
@@ -643,120 +631,158 @@ class Crawler:
                 F.col("_b.score").alias("score"),
                 F.col("_b.src_url").alias("src_url"),
             )
-            .join(bc_seen(seen_all), "url", "left_anti")
-            .withColumn("discovered_ts", F.lit(round_ts))
         )
-        next_frontier = dedupe_frontier(
+
+    def _next_frontier(self, rnd: int, cand: Candidates, sched: Schedule,
+                       extracted: DataFrame) -> NextFrontier:
+        wh, cfg = self.wh, self.cfg
+        seen = wh.read("seen")
+        if cand.verdict is None:
+            # Unscheduled-but-due revisits are NOT re-queued: due-ness is
+            # recomputed fresh from history next revisit round, so the
+            # pending frontier passes through untouched and merges only
+            # with the newly-discovered children. Nothing new becomes seen.
+            leftovers = cand.frontier.drop("for_round")
+            new_seen, new_seen_rows = None, 0
+            seen_all = seen.select("url")
+        else:
+            scheduled_urls = sched.scheduled.select("url")
+            leftovers = cand.allowed.join(
+                broadcast_gate(sched.n, cfg)(scheduled_urls), "url",
+                "left_anti")
+            # url-distinct as is: scheduled ⊆ allowed and blocked =
+            # ¬allowed, both drawn from the url-distinct frontier. Not
+            # cached: its readers (the frontier anti-join, w_seen, w_bloom)
+            # rebuild it inline instead of racing to materialize a cache.
+            new_seen = scheduled_urls.unionByName(
+                cand.verdict.filter(~F.col("allowed")).select("url"))
+            # new_seen ⊆ this round's frontier, so that frontier's footer
+            # rows bound it without a Spark job (2 × n_scheduled does not:
+            # the round cap does not bound the blocked rows).
+            new_seen_rows = wh.approx_rows_where("frontier", "for_round", rnd)
+            seen_all = seen.select("url").unionByName(new_seen)
+        # Only the children meet the seen set: leftovers are frontier rows
+        # (disjoint from seen by invariant), unscheduled and robots-allowed
+        # (so not blocked), hence never in seen_all. An anti-join on url
+        # commutes with dedupe_frontier's per-url pick (SEMANTICS §4, §10),
+        # and reuses the children's groupBy url partitioning (a shuffled
+        # join exchanges only the seen side, which grows with the crawl).
+        # Outlinks are already canonical (X1 canonicalizes at resolve
+        # time), so host/hrk/path_q are JVM string expressions on the url.
+        bc_seen = broadcast_gate(wh.approx_rows("seen") + new_seen_rows, cfg)
+        children = with_url_parts(
+            self._children(extracted)
+            .join(bc_seen(seen_all), "url", "left_anti")
+            .withColumn("discovered_ts", F.lit(cfg.round_ts(rnd)))
+        )
+        frontier = dedupe_frontier(
             leftovers.select(*children.columns).unionByName(children)
         ).withColumn("for_round", F.lit(rnd + 1))
+        return NextFrontier(frontier, seen, new_seen, new_seen_rows)
 
-        # ---- writes: six sinks in one pool, then the round commit ---------
-        # The sinks are independent appends, so they run on driver threads
-        # and Spark schedules their jobs concurrently: the many small sinks
-        # (fetch_log, seen, host_state, lineage, metrics) cost about one job
-        # latency, not a serial sum (on a cluster they would be separate
-        # Iceberg commits, equally independent).
-        # extracted row count from parquet footers (no Spark job)
-        n_extracted = wh.count_rows(wh.files_added("text", text_snap))
-        mark("materialize")
+    # -- one round: sinks ----------------------------------------------------
+    def _w_fetch_log(self, rnd: int, fetch_log: DataFrame) -> None:
+        # metrics is a rollup OF fetch_log: write the log once, then roll up
+        # from the written parquet (slim, round-pruned) instead of
+        # recomputing the ok/miss join a second time in a parallel sink.
+        self.wh.append("fetch_log", fetch_log)
+        self.wh.append("metrics", fetch_metrics(
+            self.wh.read("fetch_log").filter(F.col("round") == rnd)
+        ).coalesce(1))
 
-        def w_frontier():
-            wh.append("frontier", next_frontier)
+    def _w_seen(self, rnd: int, nxt: NextFrontier) -> None:
+        if nxt.new_seen is not None:
+            self.wh.append("seen", nxt.new_seen.select(
+                "url", F.lit(rnd).alias("round")
+            ).coalesce(self.cfg.sink_fan_in(nxt.new_seen_rows)))
 
-        def w_fetch_log():
-            # metrics is a rollup OF fetch_log: write the log once, then
-            # roll up from the written parquet (slim, round-pruned) instead
-            # of recomputing the ok/miss joins a second time in a parallel
-            # sink.
-            wh.append("fetch_log",
-                      fetch_log.coalesce(cfg.sink_fan_in(n_scheduled)))
-            wh.append(
-                "metrics",
-                fetch_metrics(
-                    wh.read("fetch_log").filter(F.col("round") == rnd)
-                ).coalesce(1),
-            )
+    def _w_bloom(self, rnd: int, nxt: NextFrontier) -> None:
+        if nxt.new_seen is not None and self.cfg.use_bloom:
+            commit_bloom(self.wh, self.cfg, rnd, nxt.seen, nxt.new_seen)
 
-        def w_seen():
-            if revisit:
-                return
-            wh.append(
-                "seen",
-                new_seen.select("url", F.lit(rnd).alias("round"))
-                .coalesce(cfg.sink_fan_in(new_seen_rows)),
-            )
+    def _w_host_state(self, rnd: int, sched: Schedule) -> None:
+        # Delta append + max-merge on read (_host_state): host_state
+        # grows with total distinct hosts, so a merged coalesce(1) rewrite
+        # per round is a serial single-task full-table write at 10^8 hosts.
+        # The delta is bounded by the round's scheduled hosts. Compact the
+        # delta chain once it gets long — a distributed hash-partitioned
+        # rewrite, no coalesce(1).
+        wh, cfg = self.wh, self.cfg
+        touched = sched.scheduled.select(
+            "host", F.lit(rnd).alias("last_round")).distinct()
+        wh.append("host_state", touched.coalesce(cfg.sink_fan_in(sched.n)))
+        if len(wh._files("host_state")) > 64:
+            wh.overwrite("host_state", self._host_state().repartition(
+                cfg.host_buckets, "host"))
 
-        def w_bloom():
-            if revisit or not cfg.use_bloom:
-                return
-            commit_bloom(wh, spark, cfg, rnd, seen, new_seen)
+    def _w_lineage(self, rnd: int, sched: Schedule) -> None:
+        self.wh.append("lineage", partition_lineage(sched.scheduled).select(
+            F.lit(rnd).alias("round"), F.lit("scheduled").alias("table"), "*",
+        ).coalesce(1))
 
-        def w_host_state():
-            # Delta append + max-merge on read (see run_round's host_state
-            # read): host_state grows with total distinct hosts, so a
-            # merged coalesce(1) rewrite per round is a serial single-task
-            # full-table write at 10^8 hosts. The delta is bounded by the
-            # round's scheduled hosts. Compact the delta chain once it gets
-            # long — a distributed hash-partitioned rewrite, no coalesce(1).
-            touched = scheduled.select(
-                "host", F.lit(rnd).alias("last_round")
-            ).distinct()
-            wh.append("host_state",
-                      touched.coalesce(cfg.sink_fan_in(n_scheduled)))
-            if len(wh._files("host_state")) > 64:
-                merged = (
-                    wh.read("host_state")
-                    .groupBy("host").agg(F.max("last_round").alias("last_round"))
-                )
-                wh.overwrite(
-                    "host_state", merged.repartition(cfg.host_buckets, "host")
-                )
+    def _run_sink(self, rnd: int, name: str, fn) -> float:
+        self.spark.sparkContext.setJobDescription(f"r{rnd}:{name}")
+        t = time.time()
+        fn()
+        return round(time.time() - t, 2)
 
-        def w_lineage():
-            wh.append(
-                "lineage",
-                partition_lineage(scheduled).select(
-                    F.lit(rnd).alias("round"),
-                    F.lit("scheduled").alias("table"), "*",
-                ).coalesce(1),
-            )
-
-        # run_round returns only after the round is committed: every sink
-        # has landed and the marker records each table's snapshot, so the
-        # next round (and any reader of the log) sees the whole round, and
-        # a crash anywhere before the marker restores exactly round r-1
-        # (kill/resume test). A failed sink or commit raises from round r.
-        sinks = [w_frontier, w_seen, w_bloom, w_host_state, w_fetch_log,
-                 w_lineage]
-        sink_secs: dict[str, float] = {}
-
-        def _run_sink(fn):
-            spark.sparkContext.setJobDescription(f"r{rnd}:{fn.__name__}")
-            t = time.time()
-            try:
-                return fn()
-            finally:
-                sink_secs[fn.__name__] = round(time.time() - t, 2)
-
+    def _write_sinks(self, rnd: int, cand: Candidates, sched: Schedule,
+                     fetch_log: DataFrame,
+                     nxt: NextFrontier) -> dict[str, float]:
+        # The six sinks are independent appends, so they run on driver
+        # threads and Spark schedules their jobs concurrently: the many small
+        # sinks cost about one job latency, not a serial sum (on a cluster
+        # they would be separate Iceberg commits, equally independent).
+        # Frees the cached robots verdict, then raises if a sink failed.
+        # Returns each sink's wall seconds.
+        sinks = {
+            "w_frontier": partial(self.wh.append, "frontier", nxt.frontier),
+            "w_seen": partial(self._w_seen, rnd, nxt),
+            "w_bloom": partial(self._w_bloom, rnd, nxt),
+            "w_host_state": partial(self._w_host_state, rnd, sched),
+            "w_fetch_log": partial(self._w_fetch_log, rnd, fetch_log),
+            "w_lineage": partial(self._w_lineage, rnd, sched),
+        }
         with ThreadPoolExecutor(max_workers=len(sinks)) as pool:
-            futs = {fn.__name__: pool.submit(_run_sink, fn) for fn in sinks}
-        mark("w_sinks")
-        if verdict is not None:
-            verdict.unpersist()
+            futs = {name: pool.submit(self._run_sink, rnd, name, fn)
+                    for name, fn in sinks.items()}
+        if cand.verdict is not None:
+            cand.verdict.unpersist()
         for name, fut in futs.items():
             if fut.exception() is not None:
                 raise RuntimeError(
                     f"sink {name} failed in round {rnd}") from fut.exception()
-        stats = {
-            "round": rnd,
-            "scheduled": int(n_scheduled),
-            "extracted": int(n_extracted),
-            "seconds": round(time.time() - t0, 3),
-        }
+        return {name: fut.result() for name, fut in futs.items()}
+
+    def run_round(self, rnd: int, revisit: bool = False) -> dict:
+        """Run round `rnd`'s phases in order and commit the round."""
+        # Returns only after the round is committed: every sink has landed
+        # and the marker records each table's snapshot, so the next round
+        # (and any reader of the log) sees the whole round, and a crash
+        # anywhere before the marker restores exactly round r-1 (kill/resume
+        # test). A failed sink or commit raises from round r. The round
+        # log's stats add each phase's wall (`trace`), each sink's wall
+        # (`sinks`) and the classes Spark compiled during the round
+        # (`codegen_compiles`).
+        t0, compiles0 = time.time(), self._compiles.getCount()
+        trace: list[tuple[str, float]] = []
+        self.spark.sparkContext.setJobDescription(f"r{rnd}:schedule")
+        with _phase(trace, "schedule"):
+            cand = self._candidates(rnd, revisit)
+            sched = self._schedule(rnd, cand.allowed)
+        with _phase(trace, "materialize"):
+            extracted, n_extracted = self._materialize(rnd, sched)
+            fetch_log = self._fetch_log_frame(rnd, sched, extracted)
+            nxt = self._next_frontier(rnd, cand, sched, extracted)
+        with _phase(trace, "w_sinks"):
+            sink_secs = self._write_sinks(rnd, cand, sched, fetch_log, nxt)
+        stats = {"round": rnd, "scheduled": sched.n, "extracted": n_extracted,
+                 "seconds": round(time.time() - t0, 3)}
         # a copy: the caller gets (and the CLI prints) `stats` without the
         # per-phase walls
-        self.log.commit(rnd, self._snapshots(),
-                        {**stats, "trace": trace, "sinks": sink_secs})
+        self.log.commit(rnd, self._snapshots(), {
+            **stats, "trace": trace, "sinks": sink_secs,
+            "codegen_compiles": self._compiles.getCount() - compiles0})
         return stats
 
     # -- loop -----------------------------------------------------------------
@@ -779,12 +805,7 @@ class Crawler:
     # -- convenience ------------------------------------------------------------
     def scheduled_df(self, rnd: int) -> DataFrame:
         """Ordered schedule of a committed round (the judged artifact)."""
-        return (
-            self.wh.read("scheduled")
-            .filter(F.col("round") == rnd)
-            .drop("round", "host_bucket")
-            .orderBy("sched_rank")
-        )
+        return self._written("scheduled", rnd).orderBy("sched_rank")
 
 
 def main(argv: list[str] | None = None) -> None:

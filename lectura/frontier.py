@@ -45,14 +45,13 @@ def dedupe_frontier(df: DataFrame) -> DataFrame:
 
 def with_budget(cand: DataFrame, host_delay: DataFrame, host_state: DataFrame,
                 cfg: CrawlConfig, round_no: int,
-                broadcast_hint: bool = True) -> DataFrame:
+                hint=F.broadcast) -> DataFrame:
     """Join per-host delay (robots R4) + last-fetched round (F4) and compute
     the politeness budget exactly as CrawlConfig.budget does in Python.
 
-    `broadcast_hint=False` drops the broadcast hints (caller knows the
-    per-host tables are too large — e.g. 10^8 distinct hosts) and lets AQE
-    pick the join strategy."""
-    hint = F.broadcast if broadcast_hint else (lambda df: df)
+    `hint` wraps both per-host tables; the identity drops the broadcast
+    hints (caller knows the per-host tables are too large — e.g. 10^8
+    distinct hosts) and lets AQE pick the join strategy."""
     j = (
         cand.join(hint(host_delay), "host", "left")
         .join(hint(host_state), "host", "left")

@@ -15,7 +15,7 @@ ONE Spark path and differ only in their numpy kernel (`_size`, `_insert`,
   candidate row.
 
 The exact-set path (D4/D5) is the plain `left_anti` join the crawl runs
-when it writes frontier(r+1) (`crawl.Crawler.run_round`); it is the only
+when it writes frontier(r+1) (`crawl.Crawler._next_frontier`); it is the only
 seen filter a round applies, and the exact `seen` table doubles as the
 oracle for this module's FPP bound (B:14).
 

@@ -42,6 +42,11 @@ _DEFAULTS = {
     # the default threshold of 32 files turns every accumulated-table read
     # into a "listing leaf files" Spark job — serial round-loop latency.
     "spark.sql.sources.parallelPartitionDiscovery.threshold": "4096",
+    # Generated-class cache (static; default 100 entries): one crawl round
+    # compiles ~145 classes, so at 100 the LRU evicted each round's classes
+    # before the next round could reuse them, and every round recompiled
+    # (and re-JITted) ~130 of them.
+    "spark.sql.codegen.cache.maxEntries": "1000",
 }
 
 

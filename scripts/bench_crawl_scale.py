@@ -152,7 +152,7 @@ def schedule_leg(master: str, root: str, cap: int) -> None:
     out = os.path.join(root, f"sched_{cores}")
     t0 = time.time()
     b = with_budget(cand, host_delay, host_state, cfg, round_no=1,
-                    broadcast_hint=False)  # 10^6-host dims: AQE picks
+                    hint=lambda df: df)  # 10^6-host dims: AQE picks
     r = rank_per_host(b, cfg.salt_buckets, max_rank=cfg.max_per_host)
     s = schedule(r, cfg)
     s.write.mode("overwrite").parquet(out)

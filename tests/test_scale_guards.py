@@ -113,6 +113,27 @@ def test_asof_tie_yields_single_winner(spark, corpus, cfg, tmp_path):
     assert dup_log.count() == 0
 
 
+def test_repeat_crawl_reuses_generated_classes(spark, corpus, cfg, tmp_path):
+    """A crawl that repeats one whose generated classes are still cached
+    compiles almost none (spark.sql.codegen.cache.maxEntries,
+    lectura/session.py). With Spark's default 100-entry cache a round
+    evicts the classes the previous round compiled, so the second crawl
+    recompiles about as many classes as the first. `codegen_compiles` is
+    each round's count in the round log."""
+    # a config no other test crawls with: its literals make the first
+    # crawl compile classes of its own whatever ran before in this JVM
+    cfg = dataclasses.replace(cfg, default_delay=0.75, w2=0.375,
+                              round_seconds=61.0, max_per_host=19,
+                              salt_buckets=7)
+
+    def compiles(root):
+        crawler = _crawl(spark, corpus, cfg, str(tmp_path / root), 2)
+        return sum(crawler.log.stats(r)["codegen_compiles"] for r in (1, 2))
+
+    first, second = compiles("a"), compiles("b")
+    assert second < first / 10, (first, second)
+
+
 def test_bloom_saturation_guard_resizes(spark, tmp_path):
     """Overfill a shard past its configured capacity: bloom_stats must
     record saturated=True and the filter must be rebuilt from the exact
@@ -126,7 +147,7 @@ def test_bloom_saturation_guard_resizes(spark, tmp_path):
         F.concat(F.lit("http://h.example/p"), F.col("id")).alias("url")
     )
     empty_seen = spark.createDataFrame([], "url string, round int")
-    stats = commit_bloom(wh, spark, cfg, 1, empty_seen, urls)
+    stats = commit_bloom(wh, cfg, 1, empty_seen, urls)
     assert any(r["saturated"] for r in stats), "guard missed the overfill"
     recorded = wh.read("bloom_stats")
     assert recorded.filter(F.col("saturated")).count() >= 1
