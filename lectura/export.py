@@ -23,7 +23,9 @@ Plan shape (all shuffles keyed and bounded):
      doc and records the cluster size (same skew-proof shape as 2);
   4. winner join — the only stage that touches `text`: one hash join by
      url fans the kept-url set against the gated scan and feeds the
-     url-partitioned shard write.
+     write, hash-partitioned by url with no fixed fan-out: AQE coalesces
+     the shuffle partitions to the data, so a small export writes one
+     file and a large one keeps `spark.sql.shuffle.partitions` tasks.
 
 Node ids for the component step are xxhash64(url): at the 10^10-doc
 design point the expected number of colliding pairs is ~0.003·(n/10^9)²,
@@ -254,8 +256,7 @@ def export_corpus(wh: Warehouse, *, min_tokens: int = 20,
                   sample_salt: str = "",
                   shard_tokens: int | None = None,
                   chunk: tuple[int, int] | None = None,
-                  out_table: str = "train_docs",
-                  n_parts: int = 32) -> dict:
+                  out_table: str = "train_docs") -> dict:
     """Materialize the crawl's extracted text as train-ready shards.
 
     Returns {"table", "n_docs", "n_hot_buckets_dropped"}; the written
@@ -267,7 +268,10 @@ def export_corpus(wh: Warehouse, *, min_tokens: int = 20,
     Both dedup stages run over a SLIM projection (url, fingerprint,
     simhash ≈ 40 B/doc): the text column never enters a window or the CC
     iterations, and is shuffled exactly once — by the final winner join
-    that also provides the output's hash-partitioning by url. At 10^10
+    that also provides the output's hash-partitioning by url. The write
+    has no fixed fan-out: AQE coalesces those partitions to the data
+    (one file for a few hundred docs, `spark.sql.shuffle.partitions`
+    files once each holds more than the coalescing floor). At 10^10
     docs the slim winner table is ~400 GB spread across the cluster while
     the text bytes stay in scan→join→write.
 
@@ -368,15 +372,12 @@ def export_corpus(wh: Warehouse, *, min_tokens: int = 20,
         # same one-text-shuffle cost as the else-branch's url layout.
         assignment = pack_shards(
             out.select("url", "n_tokens"), "url", "n_tokens",
-            budget=shard_tokens, n_parts=n_parts,
+            budget=shard_tokens,
         ).select("url", "shard_id")
         snap = wh.overwrite(
-            out_table,
-            out.join(assignment, "url")
-            .repartition(n_parts, "shard_id"),
-        )
+            out_table, out.join(assignment, "url").repartition("shard_id"))
     else:
-        snap = wh.overwrite(out_table, out.repartition(n_parts, "url"))
+        snap = wh.overwrite(out_table, out.repartition("url"))
     for df_ in dedup_cleanup + cleanup:
         df_.unpersist()
     n_docs = wh.count_rows(wh._files(out_table))
@@ -394,7 +395,7 @@ def export_corpus(wh: Warehouse, *, min_tokens: int = 20,
                       and near_dup == "simhash")
     wh.overwrite(_state_table(out_table),
                  gated.select("url", "fingerprint", "simhash")
-                 .repartition(max(1, n_parts // 4), "url"))
+                 .repartition("url"))
     _write_meta(wh, out_table, text_snapshot=text_snapshot,
                 incremental_ok=incremental_ok,
                 min_tokens=min_tokens, min_quality=min_quality,
@@ -502,8 +503,7 @@ def export_corpus_incremental(wh: Warehouse, *,
                               langs: tuple[str, ...] | None = ("en",),
                               max_hamming: int = 3,
                               band_max_df: int | None = 256,
-                              out_table: str = "train_docs",
-                              n_parts: int = 32) -> dict:
+                              out_table: str = "train_docs") -> dict:
     """Changelog-driven incremental corpus refresh (S17 composition —
     VERDICT r4 top-next): re-gate and re-dedup only the text rows that
     CHANGED since the last export, merge with the previous result, and
@@ -623,9 +623,9 @@ def export_corpus_incremental(wh: Warehouse, *,
         text_src = text_src.unionByName(s)
     out = text_src.join(keep, "url").select(
         *EXPORT_COLS, "n_exact_copies", "cluster_size")
-    snap = wh.overwrite(out_table, out.repartition(n_parts, "url"))
+    snap = wh.overwrite(out_table, out.repartition("url"))
     wh.overwrite(_state_table(out_table),
-                 state_new.repartition(max(1, n_parts // 4), "url"))
+                 state_new.repartition("url"))
     _write_meta(wh, out_table, text_snapshot=to_snapshot,
                 incremental_ok=True, min_tokens=min_tokens,
                 min_quality=min_quality, langs=langs,

@@ -129,7 +129,7 @@ def run_point(spark, root: str, n: int, chars: int,
     gen_sec = round(time.time() - t0, 1)
     t0 = time.time()
     stats = export_corpus(wh, min_tokens=20, max_hamming=3,
-                          band_max_df=band_max_df, n_parts=64)
+                          band_max_df=band_max_df)
     wall = round(time.time() - t0, 2)
     # plant arithmetic: each 100-block loses 1 exact dup + 2 near dups
     expected = n - 3 * (n // 100)
@@ -176,7 +176,7 @@ def run_incremental(spark, wh, n: int, chars: int,
 
     t0 = time.time()
     inc = export_corpus_incremental(wh, min_tokens=20, max_hamming=3,
-                                    band_max_df=band_max_df, n_parts=64)
+                                    band_max_df=band_max_df)
     inc_wall = round(time.time() - t0, 2)
     total = n + delta
     expected = total - 3 * (total // 100)
@@ -187,7 +187,7 @@ def run_incremental(spark, wh, n: int, chars: int,
 
     t0 = time.time()
     full = export_corpus(wh, min_tokens=20, max_hamming=3,
-                         band_max_df=band_max_df, n_parts=64,
+                         band_max_df=band_max_df,
                          out_table="train_docs_fullchk")
     full_wall = round(time.time() - t0, 2)
     assert full["n_docs"] == expected, (full, expected)

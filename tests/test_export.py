@@ -6,6 +6,7 @@ import random
 
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 from lectura.export import export_corpus
 from lectura.pure.enrich import enrich_text
@@ -76,9 +77,9 @@ def _reference(docs, min_tokens=20, max_hamming=3):
     return keep
 
 
-@pytest.fixture(scope="module")
-def text_wh(spark, tmp_path_factory):
-    docs = _mk_docs()
+def _text_df(spark, docs):
+    """The text table's export columns for {url: text}, enriched by the
+    pure-Python kernel the crawl's extraction runs."""
     rows = []
     for u, t in docs.items():
         s = enrich_text(t, {})
@@ -87,18 +88,24 @@ def text_wh(spark, tmp_path_factory):
             "quality": s["quality"], "lang_guess": s["lang_guess"],
             "fingerprint": s["fingerprint"], "simhash": s["simhash"],
         })
-    wh = Warehouse(str(tmp_path_factory.mktemp("exp") / "wh"), spark)
-    wh.overwrite("text", spark.createDataFrame(
+    return spark.createDataFrame(
         pd.DataFrame(rows),
         schema="url string, text string, n_tokens int, quality double, "
                "lang_guess string, fingerprint long, simhash long",
-    ))
+    )
+
+
+@pytest.fixture(scope="module")
+def text_wh(spark, tmp_path_factory):
+    docs = _mk_docs()
+    wh = Warehouse(str(tmp_path_factory.mktemp("exp") / "wh"), spark)
+    wh.overwrite("text", _text_df(spark, docs))
     return wh, docs
 
 
 def test_export_matches_pure_reference(text_wh):
     wh, docs = text_wh
-    stats = export_corpus(wh, min_tokens=20, max_hamming=3, n_parts=4)
+    stats = export_corpus(wh, min_tokens=20, max_hamming=3)
     ref = _reference(docs)
     got = {r.url: r for r in wh.read("train_docs").collect()}
     assert set(got) == set(ref)
@@ -135,7 +142,7 @@ def test_export_saturated_simhash_bucket_capped(spark, tmp_path):
                "lang_guess string, fingerprint long, simhash long",
     ))
     stats = export_corpus(wh, min_tokens=20, max_hamming=3,
-                          band_max_df=64, n_parts=4)
+                          band_max_df=64)
     assert stats["n_hot_buckets_dropped"] == 4   # all 4 chunks saturated
     assert stats["n_docs"] == 300                # no pairs → no clustering
     got = wh.read("train_docs").collect()
@@ -144,11 +151,38 @@ def test_export_saturated_simhash_bucket_capped(spark, tmp_path):
 
 def test_export_gates_and_determinism(text_wh):
     wh, docs = text_wh
-    r1 = export_corpus(wh, min_tokens=20, max_hamming=3, n_parts=4)
-    r2 = export_corpus(wh, min_tokens=20, max_hamming=3, n_parts=4)
+    r1 = export_corpus(wh, min_tokens=20, max_hamming=3)
+    r2 = export_corpus(wh, min_tokens=20, max_hamming=3)
     assert r1["n_docs"] == r2["n_docs"]
     got = {r.url for r in wh.read("train_docs").collect()}
     assert "http://short.example/" not in got  # token gate applied
+
+
+def test_export_default_layout(spark, text_wh, tmp_path):
+    """No fixed fan-out: AQE coalesces each export write to the data, so
+    a few dozen docs land in one file per table — for the full export
+    and for an incremental refresh after an appended text round."""
+    from lectura.export import export_corpus_incremental
+
+    src, _ = text_wh
+    # a copy of the fixture's text table: the append below must not
+    # leak into the module-scoped fixture other tests read
+    wh = Warehouse(str(tmp_path / "wh"), spark)
+    wh.overwrite("text", src.read("text"))
+
+    def n_files():
+        return (len(wh._files("train_docs")),
+                len(wh._files("train_docs_state")))
+
+    export_corpus(wh, min_tokens=20, max_hamming=3)
+    assert n_files() == (1, 1)
+    rng = random.Random(5)
+    new = {f"http://n{i}.example/p": " ".join(
+        rng.choice(VOCAB) for _ in range(40)) for i in range(5)}
+    wh.append("text", _text_df(spark, new))
+    stats = export_corpus_incremental(wh, min_tokens=20, max_hamming=3)
+    assert stats["n_changed"] == len(new)
+    assert n_files() == (1, 1)
 
 
 def test_export_selection_stages(spark, text_wh, tmp_path):
@@ -157,7 +191,7 @@ def test_export_selection_stages(spark, text_wh, tmp_path):
     with the bench text; sampling at rate 1.0 keeps everything (and is
     deterministic); shard_ids follow the exact url-ordered prefix sum."""
     wh, docs = text_wh
-    base_stats = export_corpus(wh, min_tokens=20, max_hamming=3, n_parts=4,
+    base_stats = export_corpus(wh, min_tokens=20, max_hamming=3,
                                out_table="sel_base")
     kept = {r.url: r for r in wh.read("sel_base").collect()}
 
@@ -166,7 +200,7 @@ def test_export_selection_stages(spark, text_wh, tmp_path):
     bench_text = docs["http://a.example/base"]
     bench = spark.createDataFrame(
         pd.DataFrame([{"url": "bench://0", "text": bench_text}]))
-    stats = export_corpus(wh, min_tokens=20, max_hamming=3, n_parts=4,
+    stats = export_corpus(wh, min_tokens=20, max_hamming=3,
                           bench=bench, contam_n=4, out_table="sel_decon")
     got = {r.url for r in wh.read("sel_decon").collect()}
     want_dropped = {u for u in kept
@@ -176,12 +210,12 @@ def test_export_selection_stages(spark, text_wh, tmp_path):
 
     # sampling: rate 1.0 keeps all (nested-sample property at the top),
     # rate 0.0 default drops docs of unlisted strata (all are 'en' here)
-    stats = export_corpus(wh, min_tokens=20, max_hamming=3, n_parts=4,
+    stats = export_corpus(wh, min_tokens=20, max_hamming=3,
                           sample_rates={"en": 1.0}, out_table="sel_samp")
     assert stats["n_docs"] == len(kept)
 
     # shard packing: exact prefix-sum assignment in url order
-    stats = export_corpus(wh, min_tokens=20, max_hamming=3, n_parts=4,
+    stats = export_corpus(wh, min_tokens=20, max_hamming=3,
                           shard_tokens=200, out_table="sel_shard")
     rows = sorted(((r.url, r.n_tokens, r.shard_id)
                    for r in wh.read("sel_shard").collect()))
@@ -192,6 +226,27 @@ def test_export_selection_stages(spark, text_wh, tmp_path):
     assert stats["n_shards"] == rows[-1][2] + 1 > 1
     assert stats["n_docs"] == len(kept)
 
+    # the shard write clusters by shard_id: every shard sits in exactly
+    # one file, whether AQE coalesced the write's partitions (the
+    # default) or wrote one file per shuffle partition
+    def files_per_shard(table):
+        return [r["count"] for r in wh.read(table)
+                .select("shard_id", F.input_file_name().alias("file"))
+                .distinct().groupBy("shard_id").count().collect()]
+
+    assert files_per_shard("sel_shard") == [1] * stats["n_shards"]
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    was = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        export_corpus(wh, min_tokens=20, max_hamming=3, shard_tokens=200,
+                      out_table="sel_shard_uncoalesced")
+    finally:
+        spark.conf.set(key, was)
+    assert len(wh._files("sel_shard_uncoalesced")) > 1
+    assert (files_per_shard("sel_shard_uncoalesced")
+            == [1] * stats["n_shards"])
+
 
 def test_export_chunked_windows(spark, text_wh):
     """--chunk re-cuts surviving docs into overlapping training windows
@@ -199,11 +254,11 @@ def test_export_chunked_windows(spark, text_wh):
     reconstruct each doc, metadata is inherited per chunk, composite
     keys are unique, and packing operates on chunk keys."""
     wh, docs = text_wh
-    base = export_corpus(wh, min_tokens=20, max_hamming=3, n_parts=4,
+    base = export_corpus(wh, min_tokens=20, max_hamming=3,
                          out_table="chunk_base")
     survivors = {r.url: r for r in wh.read("chunk_base").collect()}
 
-    stats = export_corpus(wh, min_tokens=20, max_hamming=3, n_parts=4,
+    stats = export_corpus(wh, min_tokens=20, max_hamming=3,
                           chunk=(16, 12), shard_tokens=64,
                           out_table="chunk_out")
     rows = [r for r in wh.read("chunk_out").collect()]
@@ -277,22 +332,9 @@ def _mk_backend_docs():
 
 @pytest.mark.parametrize("backend", ["simhash", "minhash", "containment"])
 def test_export_near_dup_backends(spark, tmp_path, backend):
-    docs = _mk_backend_docs()
-    rows = []
-    for u, t in docs.items():
-        s = enrich_text(t, {})
-        rows.append({
-            "url": u, "text": t, "n_tokens": s["n_tokens"],
-            "quality": s["quality"], "lang_guess": s["lang_guess"],
-            "fingerprint": s["fingerprint"], "simhash": s["simhash"],
-        })
     wh = Warehouse(str(tmp_path / "wh"), spark)
-    wh.overwrite("text", spark.createDataFrame(
-        pd.DataFrame(rows),
-        schema="url string, text string, n_tokens int, quality double, "
-               "lang_guess string, fingerprint long, simhash long",
-    ))
-    stats = export_corpus(wh, min_tokens=20, max_hamming=3, n_parts=4,
+    wh.overwrite("text", _text_df(spark, _mk_backend_docs()))
+    stats = export_corpus(wh, min_tokens=20, max_hamming=3,
                           near_dup=backend, near_dup_threshold=0.8)
     assert stats["near_dup"] == backend  # stats line reports the backend
     got = {r.url: r for r in wh.read("train_docs").collect()}
@@ -324,21 +366,8 @@ def test_export_near_dup_backends(spark, tmp_path, backend):
 def test_export_incremental_rejects_text_backends(spark, tmp_path):
     from lectura.export import export_corpus_incremental
 
-    docs = _mk_backend_docs()
-    rows = []
-    for u, t in docs.items():
-        s = enrich_text(t, {})
-        rows.append({
-            "url": u, "text": t, "n_tokens": s["n_tokens"],
-            "quality": s["quality"], "lang_guess": s["lang_guess"],
-            "fingerprint": s["fingerprint"], "simhash": s["simhash"],
-        })
     wh = Warehouse(str(tmp_path / "wh"), spark)
-    wh.overwrite("text", spark.createDataFrame(
-        pd.DataFrame(rows),
-        schema="url string, text string, n_tokens int, quality double, "
-               "lang_guess string, fingerprint long, simhash long",
-    ))
-    export_corpus(wh, min_tokens=20, n_parts=4, near_dup="minhash")
+    wh.overwrite("text", _text_df(spark, _mk_backend_docs()))
+    export_corpus(wh, min_tokens=20, near_dup="minhash")
     with pytest.raises(ValueError, match="near-dup backend"):
-        export_corpus_incremental(wh, min_tokens=20, n_parts=4)
+        export_corpus_incremental(wh, min_tokens=20)

@@ -80,7 +80,7 @@ def test_incremental_after_append_equals_full(spark, tmp_path):
     wh = Warehouse(str(tmp_path / "wh"), spark)
     wh.overwrite("text", spark.createDataFrame(_rows(_batch1()),
                                                schema=SCHEMA))
-    export_corpus(wh, min_tokens=20, max_hamming=3, n_parts=4)
+    export_corpus(wh, min_tokens=20, max_hamming=3)
     snap_before = wh.snapshot("text")
 
     wh.append("text", spark.createDataFrame(_rows(_batch2()),
@@ -93,15 +93,14 @@ def test_incremental_after_append_equals_full(spark, tmp_path):
     assert got_files <= added and got_files
     assert "Exchange" not in ch._jdf.queryExecution().executedPlan().toString()
 
-    stats = export_corpus_incremental(wh, min_tokens=20, max_hamming=3,
-                                      n_parts=4)
+    stats = export_corpus_incremental(wh, min_tokens=20, max_hamming=3)
     assert stats["mode"] == "incremental"
     assert stats["n_changed"] == len(_batch2())
     # append-only commits can never promote an old loser to winner
     assert stats["n_promoted_fetched"] == 0
 
     got = _table_rows(wh, "train_docs")
-    export_corpus(wh, min_tokens=20, max_hamming=3, n_parts=4,
+    export_corpus(wh, min_tokens=20, max_hamming=3,
                   out_table="full_check")
     want = _table_rows(wh, "full_check")
     assert got == want
@@ -124,24 +123,22 @@ def test_incremental_noop_and_idempotent_replay(spark, tmp_path):
     wh = Warehouse(str(tmp_path / "wh"), spark)
     wh.overwrite("text", spark.createDataFrame(_rows(_batch1()),
                                                schema=SCHEMA))
-    export_corpus(wh, min_tokens=20, max_hamming=3, n_parts=4)
+    export_corpus(wh, min_tokens=20, max_hamming=3)
     first = wh.snapshot("text")
     wh.append("text", spark.createDataFrame(_rows(_batch2()),
                                             schema=SCHEMA))
-    export_corpus_incremental(wh, min_tokens=20, max_hamming=3, n_parts=4)
+    export_corpus_incremental(wh, min_tokens=20, max_hamming=3)
     want = _table_rows(wh, "train_docs")
 
     # no new text commits → clean no-op, table untouched
-    stats = export_corpus_incremental(wh, min_tokens=20, max_hamming=3,
-                                      n_parts=4)
+    stats = export_corpus_incremental(wh, min_tokens=20, max_hamming=3)
     assert stats.get("unchanged") is True
     assert _table_rows(wh, "train_docs") == want
 
     # replay from an OLDER snapshot (stale meta after a crash between
     # the three commits): idempotent, same table
     stats = export_corpus_incremental(wh, from_snapshot=first,
-                                      min_tokens=20, max_hamming=3,
-                                      n_parts=4)
+                                      min_tokens=20, max_hamming=3)
     assert stats["n_changed"] == len(_batch2())
     assert _table_rows(wh, "train_docs") == want
 
@@ -153,18 +150,17 @@ def test_incremental_update_promotes_loser(spark, tmp_path):
     wh = Warehouse(str(tmp_path / "wh"), spark)
     wh.overwrite("text", spark.createDataFrame(_rows(_batch1()),
                                                schema=SCHEMA))
-    export_corpus(wh, min_tokens=20, max_hamming=3, n_parts=4)
+    export_corpus(wh, min_tokens=20, max_hamming=3)
     # kill the whole base family except the exact-dup loser, so the
     # promoted winner's cluster has no other member in the old output
     upd = _rows({"http://a.example/base": "now far too short",
                  "http://b.example/near1": "also far too short"})
     wh.merge("text", spark.createDataFrame(upd, schema=SCHEMA), "url")
 
-    stats = export_corpus_incremental(wh, min_tokens=20, max_hamming=3,
-                                      n_parts=4)
+    stats = export_corpus_incremental(wh, min_tokens=20, max_hamming=3)
     assert stats["n_promoted_fetched"] == 1
     got = _table_rows(wh, "train_docs")
-    export_corpus(wh, min_tokens=20, max_hamming=3, n_parts=4,
+    export_corpus(wh, min_tokens=20, max_hamming=3,
                   out_table="full_check")
     assert got == _table_rows(wh, "full_check")
     by_url = {r[0]: r for r in got}
@@ -179,29 +175,26 @@ def test_incremental_guards(spark, tmp_path):
                                                schema=SCHEMA))
     # no prior export → no meta
     with pytest.raises(FileNotFoundError, match="export meta"):
-        export_corpus_incremental(wh, n_parts=4)
+        export_corpus_incremental(wh)
     # full run with a selection stage is not incrementally composable
-    export_corpus(wh, min_tokens=20, max_hamming=3, n_parts=4,
+    export_corpus(wh, min_tokens=20, max_hamming=3,
                   sample_rates={"en": 1.0})
     with pytest.raises(ValueError, match="selection stages"):
-        export_corpus_incremental(wh, min_tokens=20, max_hamming=3,
-                                  n_parts=4)
+        export_corpus_incremental(wh, min_tokens=20, max_hamming=3)
     # a text-based near-dup backend (minhash/containment) is not
     # incrementally composable either — the slim state carries no text,
     # so a refresh would silently fall back to simhash semantics
-    export_corpus(wh, min_tokens=20, max_hamming=3, n_parts=4,
+    export_corpus(wh, min_tokens=20, max_hamming=3,
                   near_dup="minhash")
     with pytest.raises(ValueError, match="near-dup backend"):
-        export_corpus_incremental(wh, min_tokens=20, max_hamming=3,
-                                  n_parts=4)
+        export_corpus_incremental(wh, min_tokens=20, max_hamming=3)
     # param drift raises instead of silently diverging
-    export_corpus(wh, min_tokens=20, max_hamming=3, n_parts=4)
+    export_corpus(wh, min_tokens=20, max_hamming=3)
     wh.append("text", spark.createDataFrame(
         _rows({"http://new.example/d": "fresh words " * 20}),
         schema=SCHEMA))
     with pytest.raises(ValueError, match="full re-export"):
-        export_corpus_incremental(wh, min_tokens=5, max_hamming=3,
-                                  n_parts=4)
+        export_corpus_incremental(wh, min_tokens=5, max_hamming=3)
 
 
 def test_maintain_expiry_preserves_incremental_baseline(spark, tmp_path):
@@ -219,7 +212,7 @@ def test_maintain_expiry_preserves_incremental_baseline(spark, tmp_path):
     wh.overwrite("text", spark.createDataFrame(_rows(_batch1()),
                                                schema=SCHEMA))
     base_snap = wh.snapshot("text")
-    export_corpus(wh, min_tokens=20, max_hamming=3, n_parts=4)
+    export_corpus(wh, min_tokens=20, max_hamming=3)
     wh.append("text", spark.createDataFrame(_rows(_batch2()),
                                             schema=SCHEMA))
 
@@ -228,11 +221,10 @@ def test_maintain_expiry_preserves_incremental_baseline(spark, tmp_path):
     maintain(wh, expire_keep=1)
     assert wh.read("text", snapshot=base_snap).count() > 0
 
-    stats = export_corpus_incremental(wh, min_tokens=20, max_hamming=3,
-                                      n_parts=4)
+    stats = export_corpus_incremental(wh, min_tokens=20, max_hamming=3)
     assert stats["n_changed"] > 0
     inc = _table_rows(wh, "train_docs")
-    export_corpus(wh, min_tokens=20, max_hamming=3, n_parts=4,
+    export_corpus(wh, min_tokens=20, max_hamming=3,
                   out_table="full_ref")
     assert inc == _table_rows(wh, "full_ref")
 
@@ -243,7 +235,7 @@ def test_maintain_expiry_preserves_incremental_baseline(spark, tmp_path):
         wh.read("text", snapshot=base_snap)
     # and the chain is still alive going forward
     assert export_corpus_incremental(
-        wh, min_tokens=20, max_hamming=3, n_parts=4)["unchanged"]
+        wh, min_tokens=20, max_hamming=3)["unchanged"]
 
 
 def test_dropped_export_does_not_pin_retention(spark, tmp_path):
@@ -257,7 +249,7 @@ def test_dropped_export_does_not_pin_retention(spark, tmp_path):
     wh.overwrite("text", spark.createDataFrame(_rows(_batch1()),
                                                schema=SCHEMA))
     base_snap = wh.snapshot("text")
-    export_corpus(wh, min_tokens=20, max_hamming=3, n_parts=4)
+    export_corpus(wh, min_tokens=20, max_hamming=3)
     wh.append("text", spark.createDataFrame(_rows(_batch2()),
                                             schema=SCHEMA))
     assert _export_baselines(wh) == [base_snap]
