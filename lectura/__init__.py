@@ -6,3 +6,7 @@ empty at survey time — see SURVEY.md §0). Semantics frozen in SEMANTICS.md.
 """
 
 __version__ = "0.1.0"
+
+from lectura.pyworker import install as _install_pyworker
+
+_install_pyworker()

@@ -213,9 +213,9 @@ def asof_fetch(pages: DataFrame, scheduled: DataFrame, round_ts, cfg,
     # extractor) — and slim/WARC-gzipped rows make this shuffle cheap.
     # n_extract_parts comes from extract_fan_out: one task per core, more
     # only when every task still gets a full Arrow batch. Each Python task
-    # costs a fixed ~0.22 CPU-s of worker time and ~65 ms of wall on a
-    # 4-vCPU host (mapInArrow and rdd.map pay it too): 64 tasks over a
-    # 150-row round cost ~14 worker CPU-s, 4 tasks ~0.9.
+    # has a fixed cost whatever its rows: ~0.04 CPU-s of worker time on a
+    # 4-vCPU host, or ~0.2 where zip importers re-read their archives
+    # before every task (Python < 3.13 without lectura.pyworker).
     # A WARC corpus (S1b) carries only pointers into its packfiles, so
     # page bytes never enter the JVM.
     body = (WARC_POINTER_COLS if "warc_file" in pages.columns

@@ -22,42 +22,44 @@ LINEAGE_SCHEMA = (
 )
 
 
+def _lineage_per_part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """partition_lineage's per-task pass. Module-level, so the pickled UDF
+    refers to it by name and the worker imports lectura to run it."""
+    from pyspark import TaskContext
+
+    pid = TaskContext.get().partitionId()
+    n = 0
+    mn: int | None = None
+    mx: int | None = None
+    h = hashlib.sha256()
+    urls: list[str] = []
+    for pdf in batches:
+        n += len(pdf)
+        if len(pdf):
+            lo, hi = int(pdf["_uk"].min()), int(pdf["_uk"].max())
+            mn = lo if mn is None else min(mn, lo)
+            mx = hi if mx is None else max(mx, hi)
+            urls.extend(pdf["_u"].tolist())
+    for u in sorted(urls):
+        h.update(u.encode())
+    yield pd.DataFrame(
+        {
+            "part_id": [pid],
+            "input_rows": [n],
+            "min_url_key": [mn],
+            "max_url_key": [mx],
+            "sha256": [h.hexdigest()],
+        }
+    )
+
+
 def partition_lineage(df: DataFrame, url_col: str = "url") -> DataFrame:
     """One row per physical partition: counts, url_key range, and a
     content checksum over the sorted canonical URLs (A6)."""
     keyed = df.withColumn("_uk", F.xxhash64(url_col)).select(
         F.col(url_col).alias("_u"), "_uk"
     )
-
-    def per_part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        n = 0
-        mn: int | None = None
-        mx: int | None = None
-        h = hashlib.sha256()
-        urls: list[str] = []
-        for pdf in batches:
-            n += len(pdf)
-            if len(pdf):
-                lo, hi = int(pdf["_uk"].min()), int(pdf["_uk"].max())
-                mn = lo if mn is None else min(mn, lo)
-                mx = hi if mx is None else max(mx, hi)
-                urls.extend(pdf["_u"].tolist())
-        for u in sorted(urls):
-            h.update(u.encode())
-        yield pd.DataFrame(
-            {
-                "part_id": [pid],
-                "input_rows": [n],
-                "min_url_key": [mn],
-                "max_url_key": [mx],
-                "sha256": [h.hexdigest()],
-            }
-        )
-
-    return keyed.mapInPandas(per_part, LINEAGE_SCHEMA)
+    return keyed.mapInPandas(_lineage_per_part, LINEAGE_SCHEMA)
 
 
 def fetch_metrics(fetch_log: DataFrame) -> DataFrame:
